@@ -47,6 +47,18 @@ def enrich_stage(
     """Left broadcast-join ``lookup`` onto ``df`` on ``key``; fill
     non-key lookup columns with defaults for unmatched rows."""
     assert_broadcastable(lookup, max_rows)
+    return enrich_join(df, lookup, key, defaults)
+
+
+def enrich_join(
+    df: DataFrame,
+    lookup: DataFrame,
+    key: str = "source",
+    defaults: dict[str, str] | None = None,
+) -> DataFrame:
+    """``enrich_stage`` without its guard, for a caller that has already
+    run ``assert_broadcastable`` on this exact ``lookup`` (the pipeline
+    runner guards once per run, not once per unit)."""
     if defaults is None:
         defaults = {"tenant": UNKNOWN_TENANT, "category": UNKNOWN_CATEGORY}
     out = df.join(F.broadcast(lookup), on=key, how="left")

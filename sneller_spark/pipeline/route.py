@@ -32,6 +32,17 @@ def route_stage(
 ) -> DataFrame:
     """Tag each row with sink_id from the routing-rule table."""
     assert_broadcastable(rules)
+    return route_join(df, rules, on, catch_all)
+
+
+def route_join(
+    df: DataFrame,
+    rules: DataFrame,
+    on: tuple[str, str] = ("category", "level"),
+    catch_all: str = CATCH_ALL_SINK,
+) -> DataFrame:
+    """``route_stage`` without its guard, for a caller that has already
+    run ``assert_broadcastable`` on this exact ``rules`` table."""
     out = df.join(F.broadcast(rules), on=list(on), how="left")
     return out.withColumn("sink_id", F.coalesce(F.col("sink_id"), F.lit(catch_all)))
 

@@ -9,6 +9,15 @@ Committed units are never reprocessed; a killed run resumes where the
 commit log left off, and the final aggregates — computed from the
 routed output table, not from transient state — come out identical to
 a single uninterrupted run.
+
+A unit file is one parquet row group, so one Spark task; units
+therefore run concurrently, up to ``defaultParallelism`` at a time.
+The calling thread commits each unit's manifest in completion order,
+after that unit's data is durable, so the commit protocol and its
+single writer are unchanged.  Manifest ``wall_ms`` values overlap:
+their sum exceeds the run's wall time.  If a unit fails, units already
+running finish and commit, queued ones are cancelled, and the first
+error is re-raised.
 """
 
 from __future__ import annotations
@@ -16,16 +25,18 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..lookups import lookup_source_df, route_rules_df
 from .aggregate import aggregate_per_sink, aggregate_per_sink_salted
-from .enrich import enrich_stage
+from .enrich import assert_broadcastable, enrich_join
 from .lineage import LineageLog, UnitManifest, file_identity
 from .parse import parse_stage
-from .route import route_stage
+from .route import route_join
 
 ROUTED_SUBDIR = "routed"
 AGG_SUBDIR = "aggregates"
@@ -86,8 +97,32 @@ def transform(
     per core and bit-identical for the built-in bank (tested); "regex"
     runs RE2 over the decoded text and supports arbitrary patterns;
     "jvm" is the zero-Python whole-stage-codegen fallback."""
+    lookup, rules = _broadcast_tables(spark, lookup, rules)
+    return _route(df, lookup, rules, passthrough, kernel)
+
+
+def _broadcast_tables(
+    spark: SparkSession,
+    lookup: DataFrame | None = None,
+    rules: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The enrich lookup and routing rules (built-in tables unless
+    given), each passed through the broadcast guard."""
     lookup = lookup if lookup is not None else lookup_source_df(spark)
     rules = rules if rules is not None else route_rules_df(spark)
+    assert_broadcastable(lookup)
+    assert_broadcastable(rules)
+    return lookup, rules
+
+
+def _route(
+    df: DataFrame,
+    lookup: DataFrame,
+    rules: DataFrame,
+    passthrough: list[str] | None = None,
+    kernel: str = "dict",
+) -> DataFrame:
+    """``transform`` over tables ``_broadcast_tables`` already guarded."""
     if kernel == "dict":
         from .parse import parse_stage_dict
 
@@ -105,7 +140,7 @@ def transform(
             parsed = parsed.select(*passthrough, *PARSED_FIELDS)
     else:
         parsed = parse_stage(df, passthrough=passthrough)
-    return route_stage(enrich_stage(parsed, lookup), rules)
+    return route_join(enrich_join(parsed, lookup), rules)
 
 
 def unit_id_for(path: str) -> str:
@@ -247,6 +282,72 @@ def read_merged_sketch(spark: SparkSession, out_dir: str):
     return CMSketch(merged, p["depth"], p["width"], p["seed"])
 
 
+def _run_unit(
+    spark: SparkSession,
+    unit_id: str,
+    files: list[str],
+    lookup: DataFrame,
+    rules: DataFrame,
+    routed_dir: str,
+    sketch_col: str | None,
+    sketch_dir: str,
+    sketch_params: tuple[int, int, int],
+) -> UnitManifest:
+    """Read, transform and durably write one unit (plus its sketch when
+    ``sketch_col`` is set); return its manifest for the caller to
+    commit.  Runs on a ``run_pipeline`` pool thread."""
+    t0 = time.monotonic()
+    # rows_in via observe(): collected during the write pass below,
+    # so the unit is read exactly ONCE (round-1 version re-scanned
+    # the input for .count() and the output for per-sink counts)
+    obs = Observation(f"in-{unit_id}")
+    df = spark.read.parquet(*files).observe(obs, F.count(F.lit(1)).alias("rows_in"))
+    routed = _route(df, lookup, rules)
+
+    if sketch_col is not None:
+        # the write below materializes the cache, so the sketch pass
+        # reads cached rows instead of re-reading the written unit
+        # (or re-running the parse kernel); one unit's output is
+        # bounded by the input-file unit size, and spills to disk
+        from pyspark import StorageLevel
+
+        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
+
+    unit_dir = os.path.join(routed_dir, f"unit={unit_id}")
+    try:
+        # idempotent overwrite of THIS unit's directory only
+        routed.write.mode("overwrite").partitionBy("sink_id").parquet(unit_dir)
+
+        if sketch_col is not None:
+            # sketch BEFORE the commit: a committed unit therefore
+            # always has a durable sketch, and the overwrite keeps a
+            # re-processed unit idempotent
+            _write_unit_sketch(
+                routed.select(sketch_col), sketch_col,
+                os.path.join(sketch_dir, f"unit={unit_id}"), sketch_params,
+            )
+    finally:
+        if sketch_col is not None:
+            # release even on a failed write: a caller that catches
+            # and keeps the session must not pin a unit's rows
+            routed.unpersist()
+
+    # lineage + metrics from parquet footers of the files just
+    # written (counts exactly what was committed, zero extra scans)
+    per_sink, per_file = _written_file_rows(unit_dir)
+    return UnitManifest(
+        unit_id=unit_id,
+        inputs=files,
+        input_identity=file_identity(files),
+        input_bytes=sum(os.path.getsize(f) for f in files),
+        rows_in=int(obs.get["rows_in"]),
+        rows_routed=sum(per_sink.values()),
+        per_sink_rows=per_sink,
+        per_partition_rows=per_file,
+        wall_ms=(time.monotonic() - t0) * 1000.0,
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -345,60 +446,50 @@ def run_pipeline(
                 sketch_col, sdir, sketch_params,
             )
 
-    for unit_id, files in todo:
-        t0 = time.monotonic()
-        # rows_in via observe(): collected during the write pass below,
-        # so the unit is read exactly ONCE (round-1 version re-scanned
-        # the input for .count() and the output for per-sink counts)
-        obs = Observation(f"in-{unit_id}")
-        df = spark.read.parquet(*files).observe(obs, F.count(F.lit(1)).alias("rows_in"))
-        routed = transform(spark, df)
-
-        if sketch_col is not None:
-            # the write below materializes the cache, so the sketch pass
-            # reads cached rows instead of re-reading the written unit
-            # (or re-running the parse kernel); one unit's output is
-            # bounded by the input-file unit size, and spills to disk
-            from pyspark import StorageLevel
-
-            routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-
-        unit_dir = os.path.join(routed_dir, f"unit={unit_id}")
-        try:
-            # idempotent overwrite of THIS unit's directory only
-            routed.write.mode("overwrite").partitionBy("sink_id").parquet(unit_dir)
-
-            if sketch_col is not None:
-                # sketch BEFORE the commit below: a committed unit
-                # therefore always has a durable sketch, and the
-                # overwrite keeps a re-processed unit idempotent
-                _write_unit_sketch(
-                    routed.select(sketch_col), sketch_col,
-                    os.path.join(sketch_dir, f"unit={unit_id}"), sketch_params,
-                )
-        finally:
-            if sketch_col is not None:
-                # release even on a failed write: a caller that catches
-                # and keeps the session must not pin a unit's rows
-                routed.unpersist()
-
-        # lineage + metrics from parquet footers of the files just
-        # written (counts exactly what was committed, zero extra scans)
-        per_sink, per_file = _written_file_rows(unit_dir)
-        rows_routed = sum(per_sink.values())
-        log.commit(
-            UnitManifest(
-                unit_id=unit_id,
-                inputs=files,
-                input_identity=file_identity(files),
-                input_bytes=sum(os.path.getsize(f) for f in files),
-                rows_in=int(obs.get["rows_in"]),
-                rows_routed=rows_routed,
-                per_sink_rows=per_sink,
-                per_partition_rows=per_file,
-                wall_ms=(time.monotonic() - t0) * 1000.0,
-            )
+    if todo:
+        # built and guarded once per run; every unit broadcasts these
+        lookup, rules = _broadcast_tables(spark)
+        pool = ThreadPoolExecutor(
+            max_workers=min(len(todo), spark.sparkContext.defaultParallelism),
+            thread_name_prefix="sneller-unit",
         )
+        first_error: Exception | None = None
+        try:
+            futures = [
+                # wrapped per unit so each carries its own copy of the
+                # caller's local properties (job group, scheduler pool):
+                # Spark sets the SQL execution id in that copy while a
+                # query runs, so units sharing one copy would cross ids
+                pool.submit(
+                    inheritable_thread_target(spark)(_run_unit),
+                    spark, unit_id, files, lookup, rules, routed_dir,
+                    sketch_col, sketch_dir, sketch_params,
+                )
+                for unit_id, files in todo
+            ]
+            # commit on this thread only: LineageLog.commit and the
+            # commit log keep a single writer
+            for fut in as_completed(futures):
+                if fut.cancelled():
+                    continue
+                try:
+                    manifest = fut.result()
+                except Exception as e:
+                    # units already running finish and commit; queued
+                    # ones are cancelled.  cancel() keeps them queued,
+                    # so a worker still notifies as_completed for each;
+                    # shutdown(cancel_futures=True) here would drain
+                    # them unnotified and hang this loop
+                    if first_error is None:
+                        first_error = e
+                        for f in futures:
+                            f.cancel()
+                    continue
+                log.commit(manifest)
+        finally:
+            pool.shutdown(cancel_futures=True)
+        if first_error is not None:
+            raise first_error
 
     # final aggregates from all committed units (derived state — always
     # consistent with the routed table, regardless of kill/resume).

@@ -102,6 +102,10 @@ def build_table(spark):
 
 
 def list_cases() -> list[str]:
+    """Recorded case names; empty when the corpus is absent, so the
+    tests' own skipif applies instead of a collection error."""
+    if not os.path.isdir(REF_DIR):
+        return []
     return sorted(
         f[: -len(".json")]
         for f in os.listdir(REF_DIR)

@@ -48,7 +48,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SNELLER_SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SNELLER_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # HotSpot refuses to JIT-compile methods over 8 KB of bytecode
@@ -81,6 +84,24 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def default_driver_memory() -> str:
+    """Half of physical memory (``MemTotal`` in /proc/meminfo), in MiB.
+
+    Spark sizes its unified memory pool from the heap ceiling and only
+    spills when that pool fills, so a ceiling above physical memory
+    lets the OS kill the driver before Spark spills.  The other half
+    is left to the Python workers, off-heap buffers and the page
+    cache."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except OSError:  # no /proc (macOS): ask the OS directly
+        total_kib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return f"{total_kib // 2048}m"
 
 
 _shipped: set[int] = set()

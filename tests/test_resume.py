@@ -335,3 +335,113 @@ def test_sketch_backfill_and_coverage_gate(spark, input_dir, tmp_path):
     shutil.rmtree(os.path.join(out, SKETCH_SUBDIR, victim))
     with pytest.raises(ValueError, match="lack sketches"):
         read_merged_sketch(spark, out)
+
+
+def test_failing_unit_under_concurrency(spark, input_dir, tmp_path):
+    """One unparseable unit among more units than the pool is wide:
+    the run raises (instead of waiting on the queued units it
+    cancelled), every unit that committed is whole (manifest ==
+    footers), the commit log holds only whole lines, and a resume after
+    the input is fixed converges to the one-shot result."""
+    import shutil
+    import threading
+
+    from py4j.protocol import Py4JJavaError
+
+    from sneller_spark.pipeline.runner import _written_file_rows
+
+    names = sorted(f for f in os.listdir(input_dir) if f.endswith(".parquet"))
+    n_units = spark.sparkContext.defaultParallelism + 4
+    d = tmp_path / "bad_input"
+    d.mkdir()
+    # the bad file sorts first, so it fails while later units are queued
+    bad = d / "part-00-bad.parquet"
+    bad.write_bytes(b"this is not parquet")
+    for i in range(n_units - 1):
+        shutil.copy(os.path.join(input_dir, names[i % FILES]), d / f"part-{i + 1:02d}.parquet")
+    bad_id = unit_id_for(str(bad))
+
+    out = str(tmp_path / "bad_out")
+    raised: list[BaseException] = []
+
+    def failing_run():
+        try:
+            run_pipeline(spark, str(d), out)
+        except BaseException as e:
+            raised.append(e)
+
+    t = threading.Thread(target=failing_run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "run_pipeline hung after a unit failed"
+    assert len(raised) == 1 and isinstance(raised[0], Py4JJavaError)
+
+    log = LineageLog(out)
+    committed = log.committed_units()
+    assert committed and bad_id not in committed
+    for uid in committed:
+        per_sink, _ = _written_file_rows(os.path.join(out, "routed", f"unit={uid}"))
+        assert log.read_manifest(uid).rows_routed == sum(per_sink.values())
+    with open(os.path.join(out, "_commit.log")) as f:
+        text = f.read()
+    assert text.endswith("\n")
+    lines = text.splitlines()
+    assert len(lines) == len(committed)
+    assert all(len(line.split("\t")) == 4 for line in lines)
+
+    shutil.copy(os.path.join(input_dir, names[0]), bad)
+    resumed = run_pipeline(spark, str(d), out)
+    assert resumed["units_processed_this_run"] == n_units - len(committed)
+    oneshot = str(tmp_path / "bad_oneshot")
+    run_pipeline(spark, str(d), oneshot)
+    pd.testing.assert_frame_equal(
+        _norm(read_aggregates(spark, out).toPandas()),
+        _norm(read_aggregates(spark, oneshot).toPandas()),
+    )
+
+
+def test_unit_jobs_inherit_caller_job_group(spark, input_dir, tmp_path):
+    """Unit jobs run on pool threads but stay in the caller's job
+    group, so cancelJobGroup still reaches them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groupless_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("runner-group", "run_pipeline job group propagation")
+    try:
+        stats = run_pipeline(spark, input_dir, str(tmp_path / "grp"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert stats["units_processed_this_run"] == FILES
+    assert set(tracker.getJobIdsForGroup(None)) - groupless_before == set()
+    # at least one write job per unit, plus the final aggregate
+    assert len(tracker.getJobIdsForGroup("runner-group")) > FILES
+
+
+def test_broadcast_guards_run_once_per_call(spark, input_dir, tmp_path, monkeypatch):
+    """The lookup and rules tables are guarded once per run_pipeline
+    call, not once per unit, and an oversized table is still refused
+    before any unit commits."""
+    from sneller_spark.pipeline import runner
+    from sneller_spark.pipeline.enrich import (
+        MAX_BROADCAST_ROWS, BroadcastGuardError, assert_broadcastable,
+    )
+
+    calls = []
+
+    def counting_guard(df, *args, **kwargs):
+        calls.append(df)
+        return assert_broadcastable(df, *args, **kwargs)
+
+    monkeypatch.setattr(runner, "assert_broadcastable", counting_guard)
+    run_pipeline(spark, input_dir, str(tmp_path / "once"))
+    assert len(calls) == 2
+
+    big = spark.range(MAX_BROADCAST_ROWS + 1).selectExpr(
+        "'infra' AS category", "'INFO' AS level", "'sink-0' AS sink_id")
+    monkeypatch.setattr(runner, "route_rules_df", lambda _spark: big)
+    out = str(tmp_path / "refused")
+    with pytest.raises(BroadcastGuardError):
+        run_pipeline(spark, input_dir, out)
+    assert LineageLog(out).committed_units() == set()

@@ -33,20 +33,12 @@ from sneller_spark.replay_scenarios import (
     REF_NEWS,
     build_flights,
     build_news,
+    list_scenarios,
 )
 from sneller_spark.replay_testaggs import _bucket_sql, _canon, split_with
 
 pytestmark = pytest.mark.skipif(
     not Path(REF_NEW).is_dir(), reason="reference artifacts not present")
-
-
-def _scenarios():
-    out = []
-    for d in (REF_NEW, REF_NEWS):
-        for f in sorted(os.listdir(d)):
-            if f.endswith("-0-input.json"):
-                out.append((d, f[: -len("-0-input.json")]))
-    return out
 
 
 def _canon_rows(rows, drop_source_aliases=False):
@@ -104,7 +96,7 @@ def _raw_from_recorded_sql(spark, directory, name, view):
     return raw
 
 
-@pytest.mark.parametrize("directory,name", _scenarios())
+@pytest.mark.parametrize("directory,name", list_scenarios())
 def test_native_raw_matches_recorded_sql(spark, directory, name):
     from sneller_spark.adapters.search import execute_raw
 
@@ -139,7 +131,7 @@ def test_native_raw_matches_recorded_sql(spark, directory, name):
         assert nonempty, f"{name}: scenario selected nothing anywhere"
 
 
-@pytest.mark.parametrize("directory,name", _scenarios())
+@pytest.mark.parametrize("directory,name", list_scenarios())
 def test_search_json_envelope(spark, directory, name):
     """Assemble the full response from the native raw; check the
     envelope against the raw's own numbers (the raw→response step is
