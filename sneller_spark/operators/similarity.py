@@ -1,192 +1,221 @@
 """Similarity search over embedding columns (array<float>).
 
-The reference exposes INNER_PRODUCT / L1_DISTANCE / L2_DISTANCE /
-COSINE_DISTANCE as SIMD builtins (/root/reference/expr/builtin.go:227-230,
-1197-1200).  Here:
+The reference has one vectorized kernel per vector builtin, whatever
+the input size: INNER_PRODUCT / L1_DISTANCE / L2_DISTANCE /
+COSINE_DISTANCE are SIMD builtins (reference expr/builtin.go:227-230,
+1197-1200).  Here every dot product goes through one numpy kernel,
+`_inner`: it accumulates in dimension order from 0.0 in float64, which
+is the IEEE arithmetic of a left fold over the elements, so a result
+never depends on batch size, partitioning or the host's BLAS (`@` and
+`.sum()` reorder the additions and give other bits).
 
-  * `cosine_similarity_col` builds the dot/norm arithmetic from
-    higher-order array expressions (zip_with + aggregate) — JVM-side,
-    codegen'd, deterministic left-fold accumulation in double;
-  * `brute_force_cosine_topk` is the exact baseline: scan + top-k
-    (TakeOrderedAndProject) — O(N·d) per query, embarrassingly
-    parallel, no shuffle except the final k-merge;
-  * `lsh_bucketed_topk` is the scale path: sign-random-projection
-    buckets (deterministic hyperplanes, seed=42) prune the scan to
-    matching buckets, then exact re-rank inside the candidates.
+The kernel runs in Arrow-batched Python, called in two ways:
+
+  * per row, as an ``arrow_udf``: cosine against a constant query
+    (brute force, LSH, IVF and SRP top-k), the SRP bucket ids (every
+    band in one call) and the IVF argmax;
+  * per bucket, as ``groupBy(bucket).applyInArrow``: the near-dup pair
+    recheck.  Pairs are enumerated inside each bucket, so vectors never
+    travel through a join.
+
+Rounding and the exact threshold filter stay in Catalyst, which rounds
+HALF_UP on the decimal form.
+
+Malformed vectors follow one rule in every entry point:
+
+  * a null vector, or one with a null element, has a null similarity
+    and no bucket: it is never paired, sorts last in brute-force top-k
+    and is never an ANN candidate;
+  * a vector whose length differs from the query's, or from the vector
+    it is paired with, raises ValueError naming its row id;
+  * a vector with zero norm raises ValueError naming its row id.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: pairs scored per kernel step; bounds the gathered (dim, pairs) arrays
+_PAIR_CHUNK = 1 << 16
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-# ---------------------------------------------------------------------
-# Unrolled dot-product expression builders (optimization round 7).
-#
-# The fold form above (`F.aggregate(zip_with(...))`) is CodegenFallback:
-# Spark evaluates it interpreted, per element, per row — measured ~50x
-# slower than codegen on the near-dup pair recheck.  When the vector
-# length is KNOWN (probed once from the data, or implied by a constant
-# query/plane vector), the dot unrolls into a flat
-# ((0.0 + a[0]*b[0]) + a[1]*b[1]) + ... expression with the SAME
-# left-to-right IEEE-double accumulation order and the same null
-# semantics (any null / out-of-bounds element poisons the sum to null),
-# so results are bit-identical — but the flat expression whole-stage-
-# codegens.  The expression is assembled as ONE SQL string parsed by a
-# single F.expr() call: building it term-by-term through the Column API
-# costs ~3 py4j round-trips per term (~1s of DRIVER time per 512-term
-# expression), which bench.py's fn()+collect() timing pays on every
-# invocation.  Double literals use 17-significant-digit exponent form,
-# which the SQL parser reads as DOUBLE and round-trips exactly.
-# ---------------------------------------------------------------------
-
-
-_EXPR_CACHE: dict[str, Column] = {}
-
-
-def _expr(sql: str) -> Column:
-    """F.expr with memoization: the generated dot-product SQL strings
-    are deterministic per (column, vector, dim), and ANTLR-parsing a
-    ~40 KB expression string costs ~100-300 ms — paid per QUERY
-    CONSTRUCTION without the cache (bench.py times construction).
-    Columns are immutable and reusable across queries in one JVM."""
-    col = _EXPR_CACHE.get(sql)
-    if col is None:
-        col = F.expr(sql)
-        _EXPR_CACHE[sql] = col
-    return col
-
-
-def _flit(v: float) -> str:
-    """Exact round-trip DOUBLE literal (exponent form parses as double,
-    never decimal)."""
-    return f"{float(v):.17e}"
-
-
-def _dot_lits_sql(ref: str, vals) -> str:
-    """SQL for dot(`ref`, constant vector) with fold-identical
-    accumulation order."""
-    if len(vals) == 0:
-        return "0.0e0"
-    terms = " + ".join(
-        f"CAST({ref}[{i}] AS DOUBLE) * {_flit(v)}" for i, v in enumerate(vals)
-    )
-    return f"(0.0e0 + {terms})"
-
-
-def _dot_cols_sql(a: str, b: str, dim: int) -> str:
-    """SQL for dot(`a`, `b`) over KNOWN length with fold-identical
-    accumulation order."""
-    if dim == 0:
-        return "0.0e0"
-    terms = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(dim)
-    )
-    return f"(0.0e0 + {terms})"
-
-
-def _ref(name: str) -> str:
-    return f"`{name}`"
-
-
-def plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a plan (for parquet scans: the file
-    bytes), read driver-side in O(1) — no job.  Used to make widening
-    repartitions scale-adaptive: a few-hundred-KB input pays more in
-    shuffle stage overhead than the parallelism buys back, while at
-    cluster scale the estimate is GBs and widening always wins.
-    Unknown estimates err toward 'big' (repartition), the scale-safe
-    default."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # stats unavailable: assume big
-        return 1 << 62
-
-
-#: below this input size a widening repartition's extra stage costs
-#: more than the added parallelism saves (measured at bench sf0.1:
-#: +0.3-0.5s per query on ~0.6 MB inputs, vs multi-second wins on
-#: >5 MB inputs)
-WIDEN_MIN_BYTES = 4 << 20
-
-
-def _dot_lits_unrolled(a: Column | str, vals) -> Column:
-    """Dot product of an array column with a CONSTANT vector.  Pass the
-    column NAME (str) for the single-F.expr fast path; a Column falls
-    back to per-term construction (same resulting expression)."""
-    if isinstance(a, str):
-        return _expr(_dot_lits_sql(_ref(a), vals))
-    acc: Column = F.lit(0.0)
-    for i, v in enumerate(vals):
-        acc = acc + a.getItem(i).cast("double") * F.lit(float(v))
+def _inner(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot products over the first (dimension) axis, broadcasting the
+    rest: ``acc = acc + a[i] * b[i]`` from 0.0, in dimension order."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for i in range(len(a)):
+        acc = acc + a[i] * b[i]
     return acc
 
 
-def _dot_cols_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return _expr(_dot_cols_sql(_ref(a), _ref(b), dim))
-    ac = F.col(a) if isinstance(a, str) else a
-    bc = F.col(b) if isinstance(b, str) else b
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + ac.getItem(i).cast("double") * bc.getItem(i).cast("double")
-    return acc
+def _unpack(vecs: pa.Array | pa.ChunkedArray):
+    """``(valid, lengths, starts, values)`` of a list<float> column.
+    ``valid`` marks rows whose vector and every element are non-null;
+    row i's elements are ``values[starts[i]:starts[i] + lengths[i]]``."""
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    offsets = vecs.offsets.to_numpy()
+    values = vecs.values
+    valid = np.array(vecs.is_valid().to_numpy(zero_copy_only=False))
+    if values.null_count:
+        nulls = np.concatenate(
+            [[0], np.cumsum(values.is_null().to_numpy(zero_copy_only=False))]
+        )
+        valid &= nulls[offsets[1:]] == nulls[offsets[:-1]]
+    flat = values.to_numpy(zero_copy_only=False).astype(np.float64)
+    return valid, np.diff(offsets), offsets[:-1], flat
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
+def _gather(starts: np.ndarray, flat: np.ndarray, rows: np.ndarray, dim: int) -> np.ndarray:
+    """The vectors of ``rows`` (all of length ``dim``), dimension-major:
+    shape (dim, len(rows))."""
+    return flat[starts[rows] + np.arange(dim)[:, None]]
 
 
-def _qnorm(query) -> float:
-    """||q|| computed driver-side with the SAME left-to-right IEEE
-    accumulation the old in-plan fold used (0.0 + q0*q0 + q1*q1 + ...,
-    then sqrt) — bit-identical to evaluating the fold over the literal
-    array in the plan."""
-    import math
+def _fail(ids, i: int, problem: str):
+    who = f"row id {ids[int(i)].as_py()}" if ids is not None else f"row {i} of its batch"
+    raise ValueError(f"{who}: {problem}")
 
-    acc = 0.0
-    for v in query:
-        acc = acc + float(v) * float(v)
-    return math.sqrt(acc)
+
+def _check_lengths(valid, lengths, dim: int, ids, against: str) -> None:
+    bad = np.flatnonzero(valid & (lengths != dim))
+    if len(bad):
+        problem = f"vector length {lengths[bad[0]]} differs from the {against}'s {dim}"
+        _fail(ids, bad[0], problem)
+
+
+def _norms(x: np.ndarray, rows: np.ndarray, ids) -> np.ndarray:
+    norms = np.sqrt(_inner(x, x))
+    zero = np.flatnonzero(norms == 0)
+    if len(zero):
+        _fail(ids, rows[zero[0]], "vector has zero norm")
+    return norms
+
+
+def _row_udf(
+    kernel, return_type: str, vec_col: Column | str, id_col: str | None = None
+) -> Column:
+    """``kernel(vecs, ids)`` as an ``arrow_udf`` over ``vec_col``; the
+    ids (None without ``id_col``) only name rows in errors."""
+    if id_col is None:
+
+        def run(vecs: pa.Array) -> pa.Array:
+            return kernel(vecs, None)
+
+        return F.arrow_udf(run, return_type)(vec_col)
+
+    def run_named(vecs: pa.Array, ids: pa.Array) -> pa.Array:
+        return kernel(vecs, ids)
+
+    return F.arrow_udf(run_named, return_type)(vec_col, id_col)
+
+
+# ---------------------------------------------------------------------
+# per-row kernels
+# ---------------------------------------------------------------------
+
+def _cosine_kernel(query: list[float]):
+    q = np.asarray(query, dtype=np.float64)
+    qnorm = float(np.sqrt(_inner(q, q)))
+    if qnorm == 0:
+        raise ValueError("query vector has zero norm")
+
+    def kernel(vecs, ids):
+        valid, lengths, starts, flat = _unpack(vecs)
+        _check_lengths(valid, lengths, len(q), ids, "query")
+        rows = np.flatnonzero(valid)
+        x = _gather(starts, flat, rows, len(q))
+        out = np.zeros(len(valid))
+        out[rows] = _inner(x, q) / (_norms(x, rows, ids) * qnorm)
+        return pa.array(out, mask=~valid)
+
+    return kernel
 
 
 def cosine_similarity_col(vec_col: Column | str, query: list[float]) -> Column:
-    dim = len(query)
-    if isinstance(vec_col, str):
-        r = _ref(vec_col)
-        return _expr(
-            f"{_dot_lits_sql(r, query)} / "
-            f"(SQRT({_dot_cols_sql(r, r, dim)}) * {_flit(_qnorm(query))})"
-        )
-    return _dot_lits_unrolled(vec_col, query) / (
-        F.sqrt(_dot_cols_unrolled(vec_col, vec_col, dim)) * F.lit(_qnorm(query))
+    """Cosine of each row's vector against a constant query."""
+    return _row_udf(_cosine_kernel(query), "double", vec_col)
+
+
+def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
+    rng = np.random.Generator(np.random.PCG64(seed))
+    return rng.standard_normal((n_planes, dim))
+
+
+def _srp_ids(x: np.ndarray, planes: np.ndarray, n_planes: int) -> np.ndarray:
+    """Bucket ids of dimension-major vectors ``x`` against stacked plane
+    banks (bands * n_planes, dim): one bit per plane with a
+    non-negative dot, band k offset by ``k << n_planes``.  Shape
+    (len(x[0]), bands)."""
+    bits = _inner(x[:, :, None], planes.T[:, None, :]) >= 0
+    bands = len(planes) // n_planes
+    bits = bits.reshape(-1, bands, n_planes).astype(np.int64)
+    return (bits << np.arange(n_planes)).sum(axis=2) + (np.arange(bands) << n_planes)
+
+
+def _srp_kernel(n_planes: int, bands: int, banks, dim: int | None):
+    """Per-row SRP bucket ids, every band in one call, as array<int>.
+    ``banks(d)`` gives the stacked planes for vectors of length d; with
+    ``dim`` set every vector must have that length."""
+
+    def kernel(vecs, ids):
+        valid, lengths, starts, flat = _unpack(vecs)
+        if dim is not None:
+            _check_lengths(valid, lengths, dim, ids, "hyperplanes")
+        out = np.zeros((len(valid), bands), dtype=np.int32)
+        for d in np.unique(lengths[valid]):
+            rows = np.flatnonzero(valid & (lengths == d))
+            out[rows] = _srp_ids(_gather(starts, flat, rows, d), banks(int(d)), n_planes)
+        offsets = pa.array(np.arange(len(valid) + 1, dtype=np.int32) * bands)
+        return pa.ListArray.from_arrays(offsets, pa.array(out.ravel()), mask=pa.array(~valid))
+
+    return kernel
+
+
+def _srp_bucket(
+    vec_col: Column | str, planes: np.ndarray, id_col: str | None
+) -> Column:
+    kernel = _srp_kernel(len(planes), 1, lambda d: planes, planes.shape[1])
+    return _row_udf(kernel, "array<int>", vec_col, id_col).getItem(0)
+
+
+def srp_bucket_col(vec_col: Column | str, planes: np.ndarray) -> Column:
+    """Sign-random-projection bucket id: one bit per hyperplane."""
+    return _srp_bucket(vec_col, planes, None)
+
+
+def _srp_probes(query: list[float], planes: np.ndarray, probe_hamming: int) -> list[int]:
+    """The query's own bucket (same kernel as the rows') plus, with
+    ``probe_hamming`` >= 1, every bucket one bit away."""
+    qv = np.asarray(query, dtype=np.float64)[:, None]
+    qbucket = int(_srp_ids(qv, planes, len(planes))[0, 0])
+    probes = [qbucket]
+    if probe_hamming >= 1:
+        probes += [qbucket ^ (1 << i) for i in range(len(planes))]
+    return probes
+
+
+def _topk(
+    candidates: DataFrame,
+    query: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    round_digits: int | None,
+) -> DataFrame:
+    sim = _row_udf(_cosine_kernel(query), "double", vec_col, id_col)
+    if round_digits is not None:
+        sim = F.round(sim, round_digits)
+    return (
+        candidates.select(F.col(id_col), sim.alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .limit(k)
     )
-
-
-def l2_distance_col(vec_col: Column | str, query: list[float]) -> Column:
-    if isinstance(vec_col, str):
-        r = _ref(vec_col)
-        terms = " + ".join(
-            f"(CAST({r}[{i}] AS DOUBLE) - {_flit(v)})"
-            f" * (CAST({r}[{i}] AS DOUBLE) - {_flit(v)})"
-            for i, v in enumerate(query)
-        )
-        return _expr(f"SQRT(0.0e0 + {terms})" if query else "SQRT(0.0e0)")
-    acc: Column = F.lit(0.0)
-    for i, v in enumerate(query):
-        d = vec_col.getItem(i).cast("double") - F.lit(float(v))
-        acc = acc + d * d
-    return F.sqrt(acc)
 
 
 def brute_force_cosine_topk(
@@ -197,44 +226,9 @@ def brute_force_cosine_topk(
     vec_col: str = "embedding",
     round_digits: int | None = 4,
 ) -> DataFrame:
-    sim = cosine_similarity_col(vec_col, query)
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    return (
-        df.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.Generator(np.random.PCG64(seed))
-    return rng.standard_normal((n_planes, dim))
-
-
-def srp_bucket_col(vec_col: Column | str, planes: np.ndarray) -> Column:
-    """Sign-random-projection bucket id: one bit per hyperplane.  Each
-    plane dot is the unrolled literal-coefficient form (same fold order
-    as before — bit-identical sign decisions) so the whole bucket
-    expression whole-stage-codegens instead of falling back to
-    interpreted ArrayAggregate per plane.  With a str column name the
-    whole bucket expression is ONE parsed SQL string (a Column-API
-    build costs ~1s of py4j driver time for 8x64 terms)."""
-    if isinstance(vec_col, str):
-        r = _ref(vec_col)
-        parts = " + ".join(
-            f"(CASE WHEN {_dot_lits_sql(r, plane)} >= 0 THEN {1 << i} ELSE 0 END)"
-            for i, plane in enumerate(planes)
-        )
-        return _expr(f"CAST((0 + {parts}) AS INT)")
-    # Column input: the compact fold form (small-input mode) — same
-    # sign decisions bit-for-bit, tiny expression tree
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(v)) for v in plane])
-        bit = F.when(_dot(vec_col, p) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket.cast("int")
+    """Exact baseline: scan + top-k (TakeOrderedAndProject) — O(N·d)
+    per query, embarrassingly parallel, no shuffle but the k-merge."""
+    return _topk(df, query, k, id_col, vec_col, round_digits)
 
 
 def lsh_bucketed_topk(
@@ -252,28 +246,32 @@ def lsh_bucketed_topk(
     The scale path is write_srp_index + srp_topk_pruned below, where
     the probe is a partition-pruned scan (plan-asserted in tests)."""
     planes = _hyperplanes(len(query), n_planes)
-    qv = np.asarray(query, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0.0))
-
-    probes = [qbucket]
-    if probe_hamming >= 1:
-        probes += [qbucket ^ (1 << i) for i in range(n_planes)]
-
-    bucketed = df.withColumn("_bucket", srp_bucket_col(vec_col, planes))
-    candidates = bucketed.filter(F.col("_bucket").isin(probes))
-    sim = cosine_similarity_col(vec_col, query)
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    return (
-        candidates.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    probes = _srp_probes(query, planes, probe_hamming)
+    candidates = df.filter(_srp_bucket(vec_col, planes, id_col).isin(probes))
+    return _topk(candidates, query, k, id_col, vec_col, round_digits)
 
 
 # ---------------------------------------------------------------------
 # IVF (inverted-file) ANN — the cluster-then-probe scale path
 # ---------------------------------------------------------------------
+
+def _ivf_bucket(centroids: np.ndarray, vec_col: str, id_col: str | None) -> Column:
+    """Each vector's nearest centroid: the first maximum of the dots
+    with the unit-normalized centroids."""
+    norms = np.linalg.norm(centroids, axis=1, keepdims=True)
+    unit = centroids / np.where(norms == 0, 1, norms)
+
+    def kernel(vecs, ids):
+        valid, lengths, starts, flat = _unpack(vecs)
+        _check_lengths(valid, lengths, unit.shape[1], ids, "centroids")
+        rows = np.flatnonzero(valid)
+        x = _gather(starts, flat, rows, unit.shape[1])
+        out = np.zeros(len(valid), dtype=np.int32)
+        out[rows] = _inner(x[:, :, None], unit.T[:, None, :]).argmax(axis=1)
+        return pa.array(out, mask=~valid)
+
+    return _row_udf(kernel, "int", vec_col, id_col)
+
 
 def ivf_assign_buckets(
     df: DataFrame,
@@ -281,35 +279,10 @@ def ivf_assign_buckets(
     vec_col: str = "embedding",
     bucket_col: str = "_ivf_bucket",
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (max dot product over
-    unit-normalized centroids), entirely with JVM array expressions —
-    one greatest() over k dot products, no UDF.  At scale the table is
-    written partitioned by this column, so a query scans only probed
+    """Assign each vector to its nearest centroid.  At scale the table
+    is written partitioned by this column, so a query scans only probed
     partitions (partition pruning == IVF inverted lists)."""
-    norms = np.linalg.norm(centroids, axis=1, keepdims=True)
-    unit = centroids / np.where(norms == 0, 1, norms)
-    # two-step projection: materialize the k dot products ONCE in an
-    # array column, then take greatest/argmax off the array items.
-    # Inlining the unrolled dots directly into greatest() AND the
-    # when-chain duplicates each 64-term expression ~2k times and blows
-    # the 64 KB codegen method limit (janino falls back to interpreted
-    # eval); the multiply-referenced alias is not collapsed by Catalyst,
-    # so each dot is evaluated exactly once per row and the stage stays
-    # whole-stage-codegen'd.  best/argmax semantics (greatest + first-
-    # match when-chain) are unchanged.
-    # one parsed SQL string for the whole k-dot array (single py4j call)
-    dots_arr = _expr(
-        "ARRAY(" + ", ".join(_dot_lits_sql(_ref(vec_col), c) for c in unit) + ")"
-    )
-    tmp = df.withColumn("_ivf_dots", dots_arr)
-    k = len(unit)
-    items = [F.col("_ivf_dots").getItem(i) for i in range(k)]
-    best = F.greatest(*items) if k > 1 else items[0]
-    bucket = F.lit(0)
-    # argmax via when-chain (k is small: 8-64 centroids)
-    for i in range(k - 1, -1, -1):
-        bucket = F.when(items[i] == best, F.lit(i)).otherwise(bucket)
-    return tmp.withColumn(bucket_col, bucket.cast("int")).drop("_ivf_dots")
+    return df.withColumn(bucket_col, _ivf_bucket(centroids, vec_col, None))
 
 
 def train_ivf_centroids(
@@ -364,16 +337,8 @@ def ivf_topk(
     re-rank).  Use write_ivf_index + ivf_topk_pruned for the scale
     path, where the probe is a partition-pruned scan."""
     probes = _rank_probes(query, centroids, n_probe)
-    bucketed = ivf_assign_buckets(df, centroids, vec_col)
-    candidates = bucketed.filter(F.col("_ivf_bucket").isin(probes))
-    sim = cosine_similarity_col(vec_col, query)
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    return (
-        candidates.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    candidates = df.filter(_ivf_bucket(centroids, vec_col, id_col).isin(probes))
+    return _topk(candidates, query, k, id_col, vec_col, round_digits)
 
 
 # ---------------------------------------------------------------------
@@ -388,9 +353,9 @@ def write_ivf_index(
     path: str,
     vec_col: str = "embedding",
 ) -> None:
-    """One-time index build: assign buckets (JVM expressions only) and
-    write the table PARTITIONED BY the bucket.  At 100 TB this is one
-    full pass; every subsequent query reads n_probe directories."""
+    """One-time index build: assign buckets and write the table
+    PARTITIONED BY the bucket.  At 100 TB this is one full pass; every
+    subsequent query reads n_probe directories."""
     bucketed = ivf_assign_buckets(df, centroids, vec_col, bucket_col="ivf_bucket")
     bucketed.write.mode("overwrite").partitionBy("ivf_bucket").parquet(path)
 
@@ -414,38 +379,96 @@ def ivf_topk_pruned(
     candidates = spark.read.parquet(index_path).filter(
         F.col("ivf_bucket").isin(probes)
     )
-    sim = cosine_similarity_col(vec_col, query)
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    return (
-        candidates.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    return _topk(candidates, query, k, id_col, vec_col, round_digits)
 
 
-def cosine_pair_sim(
-    va: Column | str, vb: Column | str, dim: int | None = None
-) -> Column:
-    """Pairwise cosine.  With ``dim`` known (probed once from the data)
-    the three dots unroll into flat codegen'd expressions — bit-identical
-    to the fold form (same accumulation order), ~50x faster per pair;
-    str column names additionally build the whole thing as one parsed
-    SQL string (single py4j call)."""
-    if dim is None:
-        va = F.col(va) if isinstance(va, str) else va
-        vb = F.col(vb) if isinstance(vb, str) else vb
-        return _dot(va, vb) / (_norm(va) * _norm(vb))
-    if isinstance(va, str) and isinstance(vb, str):
-        a, b = _ref(va), _ref(vb)
-        return _expr(
-            f"{_dot_cols_sql(a, b, dim)} / "
-            f"(SQRT({_dot_cols_sql(a, a, dim)}) * SQRT({_dot_cols_sql(b, b, dim)}))"
-        )
-    return _dot_cols_unrolled(va, vb, dim) / (
-        F.sqrt(_dot_cols_unrolled(va, va, dim))
-        * F.sqrt(_dot_cols_unrolled(vb, vb, dim))
-    )
+# ---------------------------------------------------------------------
+# near-duplicate pairs: per-bucket pair recheck
+# ---------------------------------------------------------------------
+
+def _pair_chunks(key: np.ndarray, star: bool):
+    """Positions (ia, ib) of the pairs to score in a bucket whose rows
+    are sorted by id ``key``, about _PAIR_CHUNK at a time: every pair
+    with key[ia] < key[ib], or with ``star`` only the min-id row against
+    every row with another id."""
+    n = len(key)
+    if star:
+        others = np.flatnonzero(key != key[0])
+        for s in range(0, len(others), _PAIR_CHUNK):
+            ib = others[s : s + _PAIR_CHUNK]
+            yield np.zeros_like(ib), ib
+        return
+    i0 = 0
+    while i0 < n - 1:
+        i1, count = i0, 0
+        while i1 < n - 1 and (count == 0 or count + n - 1 - i1 <= _PAIR_CHUNK):
+            count += n - 1 - i1
+            i1 += 1
+        left = np.arange(i0, i1)
+        lens = n - 1 - left
+        ia = np.repeat(left, lens)
+        ib = np.arange(len(ia)) - np.repeat(np.cumsum(lens) - lens, lens) + ia + 1
+        keep = key[ia] < key[ib]
+        yield ia[keep], ib[keep]
+        i0 = i1
+
+
+def _pair_kernel(floor: float, max_bucket_size: int | None):
+    """One bucket (a pyarrow Table of id, v) -> its pairs (id_a < id_b)
+    with cosine >= ``floor``.  A bucket over ``max_bucket_size`` rows
+    scores only star pairs against its min-id row."""
+
+    def run(table: pa.Table) -> pa.Table:
+        ids = table.column("id").combine_chunks()
+        valid, lengths, starts, flat = _unpack(table.column("v"))
+        rows = np.flatnonzero(valid)
+        rows = rows[pc.sort_indices(ids.take(rows), null_placement="at_end").to_numpy()]
+        key = ids.take(rows)  # sorted; null ids last, never paired
+        if len(rows) > 1:
+            bad = rows[lengths[rows] != lengths[rows[0]]]
+            if len(bad):
+                _fail(ids, bad[0], f"vector length {lengths[bad[0]]} differs from the "
+                      f"{lengths[rows[0]]} of row id {key[0].as_py()} it is paired with")
+        x = _gather(starts, flat, rows, lengths[rows[0]] if len(rows) else 0)
+        norms = _norms(x, rows, ids)
+        star = max_bucket_size is not None and len(rows) > max_bucket_size
+        keyed = key.slice(0, len(key) - key.null_count).to_numpy(zero_copy_only=False)
+        ia, ib, cos = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)], [np.zeros(0)]
+        for a, b in _pair_chunks(keyed, star) if len(keyed) > 1 else ():
+            c = _inner(x[:, a], x[:, b]) / (norms[a] * norms[b])
+            keep = c >= floor
+            ia.append(a[keep])
+            ib.append(b[keep])
+            cos.append(c[keep])
+        return pa.table({
+            "id_a": key.take(np.concatenate(ia)),
+            "id_b": key.take(np.concatenate(ib)),
+            "_cos": np.concatenate(cos),
+        })
+
+    return run
+
+
+def _pairs_in_buckets(
+    keyed: DataFrame,
+    id_type: T.DataType,
+    threshold: float,
+    round_digits: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Run the pair kernel over every ``_b`` bucket of (id, v, _b) rows.
+    The kernel keeps cosines within one rounding step below the
+    threshold; Catalyst rounds and applies the exact threshold."""
+    schema = T.StructType([
+        T.StructField("id_a", id_type),
+        T.StructField("id_b", id_type),
+        T.StructField("_cos", T.DoubleType()),
+    ])
+    kernel = _pair_kernel(threshold - 10.0 ** -round_digits, max_bucket_size)
+    pairs = keyed.groupBy("_b").applyInArrow(kernel, schema)
+    return pairs.select(
+        "id_a", "id_b", F.round("_cos", round_digits).alias("cos_sim")
+    ).filter(F.col("cos_sim") >= threshold)
 
 
 def cosine_near_dup_pairs(
@@ -456,17 +479,13 @@ def cosine_near_dup_pairs(
     round_digits: int = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, EXACT all-pairs form:
-    (id_a < id_b, cos_sim >= threshold).  O(N²) by construction — use
-    only on small slices or as the verification oracle for the blocked
-    variant below."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    sim = F.round(cosine_pair_sim(F.col("_va"), F.col("_vb")), round_digits)
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
+    (id_a < id_b, cos_sim >= threshold).  One bucket holding every row,
+    so O(N²) in one task by construction — use only on small slices or
+    as the verification oracle for the blocked variant below."""
+    keyed = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.lit(0).alias("_b")
     )
+    return _pairs_in_buckets(keyed, df.schema[id_col].dataType, threshold, round_digits, None)
 
 
 def cosine_near_dup_pairs_blocked(
@@ -481,11 +500,13 @@ def cosine_near_dup_pairs_blocked(
     bands: int = 1,
 ) -> DataFrame:
     """Scale path for embedding near-dup: SRP-bucket BLOCKING — only
-    vectors sharing a sign-random-projection bucket meet in the
-    self-join (near-identical embeddings share all sign bits with high
+    vectors sharing a sign-random-projection bucket are paired
+    (near-identical embeddings share all sign bits with high
     probability), then exact cosine re-check.  One shuffle on the
     bucket id, never an all-pairs cross join; the same banded-bucket
-    layout as MinHash-LSH (operators/dedup.py).
+    layout as MinHash-LSH (operators/dedup.py).  Each vector's planes
+    have its own length, so a vector of another length can only meet
+    the others by chance — and raises when it does.
 
     ``bands`` > 1 gives MinHash-style multi-band recall for MODERATE
     similarity: a single 8-plane bank finds a cos≈0.9 pair with
@@ -495,171 +516,35 @@ def cosine_near_dup_pairs_blocked(
     1-(1-0.29)^b ≈ 0.97 at b=10.  Each row explodes to b (band,bucket)
     keys — shuffle volume scales linearly with b while the exact
     re-check keeps precision at 1.0; the planted-0.9-pair recall test
-    lives in tests/test_operators.py.  The default bands=1 keeps the
-    original single-bank plan (no explode) for the near-exact-dup
-    regime where all sign bits agree anyway.
+    lives in tests/test_operators.py.
 
     Degenerate-bucket guard (the 100 TB case): with 8 planes there are
     only 256 buckets, and a corpus of near-identical boilerplate
-    embeddings piles into ONE of them, making the self-join quadratic
-    in that bucket's size.  With ``max_bucket_size`` set, buckets above
-    the cap emit O(n) star candidates against the bucket's min-id
-    representative instead of all O(n²) pairs — the same guard as
-    minhash_candidate_pairs / simhash_near_dup_pairs.  Star candidates
-    still pass the exact cosine re-check, so every emitted pair is a
-    true near-dup; the recall contract under the cap is that two
-    members of an over-cap bucket are linked only THROUGH the
-    representative (connectivity for downstream union-find is
+    embeddings piles into ONE of them, making the pair enumeration
+    quadratic in that bucket's size.  With ``max_bucket_size`` set,
+    buckets above the cap emit O(n) star candidates against the
+    bucket's min-id representative instead of all O(n²) pairs — the
+    same guard as minhash_candidate_pairs / simhash_near_dup_pairs.
+    Star candidates still pass the exact cosine re-check, so every
+    emitted pair is a true near-dup; the recall contract under the cap
+    is that two members of an over-cap bucket are linked only THROUGH
+    the representative (connectivity for downstream union-find is
     preserved), not pairwise.  ``None`` (default) keeps the exact
-    all-pairs-within-bucket behavior.
+    all-pairs-within-bucket behavior."""
 
-    The bucket id is an expensive expression (n_planes 64-element
-    folds), so the bucketed rows are persisted and evaluated ONCE —
-    without it both join sides recompute every dot product (measured
-    multi-second on even tiny inputs: the plane-literal expression tree
-    is too large for whole-stage codegen and falls back to interpreted
-    eval).  The cache is released by Spark's ContextCleaner when the
-    returned DataFrame is garbage-collected."""
-    dim_probe = df.filter(F.col(vec_col).isNotNull()).select(
-        F.size(vec_col).alias("d")
-    ).first()
-    if dim_probe is None or dim_probe["d"] is None:
-        # empty input (or no non-null vectors): no pairs, not a crash
-        from pyspark.sql import types as T
+    def banks(dim: int) -> np.ndarray:
+        return np.vstack([_hyperplanes(dim, n_planes, seed + 7919 * k) for k in range(bands)])
 
-        id_t = df.schema[id_col].dataType
-        empty_schema = T.StructType(
-            [
-                T.StructField("id_a", id_t),
-                T.StructField("id_b", id_t),
-                T.StructField("cos_sim", T.DoubleType()),
-            ]
-        )
-        return df.sparkSession.createDataFrame([], empty_schema)
-    from pyspark import StorageLevel
-
-    dim = int(dim_probe["d"])
-    # scale-adaptive expression mode: the unrolled flat dots win by
-    # orders of magnitude once data dominates (codegen + JIT instead of
-    # interpreted folds), but their ~2000-node trees cost ~0.5s of
-    # analyzer/optimizer time per execution — more than a sub-4MB
-    # input's entire compute.  Both forms are bit-identical (same
-    # accumulation order, verified), so the switch cannot change
-    # results; small inputs keep the compact fold expressions.
-    big = plan_size_bytes(df) >= WIDEN_MIN_BYTES
-    # per-ROW norm computed once here (N rows) instead of per PAIR in
-    # the recheck (worst-case N^2/buckets pairs x 2 sides).  The pair
-    # recheck then reads dot(va,vb)/(na*nb) — the same subexpressions
-    # in the same order as sqrt(dot(a,a)) * sqrt(dot(b,b)) evaluated
-    # inline, so cos_sim is bit-identical; it also shrinks the recheck
-    # stage's generated code under the 64 KB janino method limit (the
-    # inline 3-dot form fell back to interpreted eval for the whole
-    # join stage).
-    if big:
-        nrm = _expr(f"SQRT({_dot_cols_sql(_ref(vec_col), _ref(vec_col), dim)})")
-    else:
-        nrm = F.sqrt(_dot(F.col(vec_col), F.col(vec_col)))
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        nrm.alias("_nrm"),
+    buckets = _row_udf(_srp_kernel(n_planes, bands, banks, None), "array<int>", vec_col)
+    keyed = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.explode(buckets).alias("_b")
     )
-    bucket_col = "v" if big else F.col("v")
-    if bands <= 1:
-        planes = _hyperplanes(dim, n_planes, seed)
-        bucketed = base.withColumn("_b", srp_bucket_col(bucket_col, planes))
-    else:
-        # one bucket per independent plane bank; (band, bucket) composes
-        # into a single join key so the cap/join logic below is band-blind
-        banks = [_hyperplanes(dim, n_planes, seed + 7919 * k) for k in range(bands)]
-        keys = F.array(
-            *[
-                srp_bucket_col(bucket_col, banks[k]) + F.lit(k << n_planes)
-                for k in range(bands)
-            ]
-        )
-        bucketed = base.withColumn("_b", F.explode(keys))
-    # spread the cached bucketed rows over the full parallelism: the
-    # input here is typically a handful of scan partitions (single-file
-    # parquet at bench scale), and the pair-enumeration + cosine-recheck
-    # join stage inherits the STREAM side's partitioning — without this
-    # the most expensive stage of the query runs on ~4 tasks while the
-    # other cores idle (guide §2.5 input skew / §2.6 idle capacity).
-    # The shuffle moves only (id, v, _nrm, _b) — a few MB per million
-    # rows — once, into the cache.  Size-adaptive: skipped below
-    # WIDEN_MIN_BYTES, where the extra stage costs more than it saves
-    # (measured +0.5s on a 0.6 MB input vs -25s on a 5.7 MB one).
-    if plan_size_bytes(df) >= WIDEN_MIN_BYTES:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        bucketed = bucketed.repartition(par)
-    bucketed = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
-    if max_bucket_size is None:
-        left, right = bucketed.alias("l"), bucketed.alias("r")
-        cand = left.join(
-            right,
-            (F.col("l._b") == F.col("r._b")) & (F.col("l.id") < F.col("r.id")),
-        ).select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.v").alias("va"),
-            F.col("r.v").alias("vb"),
-            F.col("l._nrm").alias("na"),
-            F.col("r._nrm").alias("nb"),
-        )
-    else:
-        stats = bucketed.groupBy("_b").agg(
-            F.count(F.lit(1)).alias("_bsize"),
-            F.min("id").alias("_rep"),
-            F.min_by("v", "id").alias("_rep_v"),
-            F.min_by("_nrm", "id").alias("_rep_n"),
-        )
-        tagged = bucketed.join(stats, "_b")
-        small = tagged.filter(F.col("_bsize") <= max_bucket_size)
-        left, right = small.alias("l"), small.alias("r")
-        small_pairs = left.join(
-            right,
-            (F.col("l._b") == F.col("r._b")) & (F.col("l.id") < F.col("r.id")),
-        ).select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.v").alias("va"),
-            F.col("r.v").alias("vb"),
-            F.col("l._nrm").alias("na"),
-            F.col("r._nrm").alias("nb"),
-        )
-        big_pairs = tagged.filter(
-            (F.col("_bsize") > max_bucket_size) & (F.col("id") != F.col("_rep"))
-        ).select(
-            F.col("_rep").alias("id_a"),
-            F.col("id").alias("id_b"),
-            F.col("_rep_v").alias("va"),
-            F.col("v").alias("vb"),
-            F.col("_rep_n").alias("na"),
-            F.col("_nrm").alias("nb"),
-        )
-        cand = small_pairs.unionByName(big_pairs)
-    pair_dot = (
-        _expr(_dot_cols_sql("`va`", "`vb`", dim))
-        if big
-        else _dot(F.col("va"), F.col("vb"))
+    out = _pairs_in_buckets(
+        keyed, df.schema[id_col].dataType, threshold, round_digits, max_bucket_size
     )
-    sim = F.round(pair_dot / (F.col("na") * F.col("nb")), round_digits)
-    # threshold wrapped in a one-element shuffle: shuffle(array(t))[1]
-    # is exactly t, but shuffle() is marked non-deterministic, so the
-    # optimizer cannot push this filter down into the pair join's
-    # condition.  Pushed down, the 64-term cosine is evaluated inside
-    # the BroadcastHashJoin's inner match loop AND again in the project
-    # above it — measured ~2x slower than evaluating it once per pair
-    # in the project and filtering on the materialized column (5.1s ->
-    # 2.8s at sf1.0).  The emitted rows are identical either way.
-    thr = F.element_at(F.shuffle(F.array(F.lit(float(threshold)))), 1)
-    out = cand.select("id_a", "id_b", sim.alias("cos_sim")).filter(
-        F.col("cos_sim") >= thr
-    )
-    # bands == 1: a pair meets in exactly one bucket (and the capped
-    # small/big bucket sets are disjoint), so pairs are already unique
-    # — the dedup shuffle is only needed when multiple bands can emit
-    # the same pair
+    # bands == 1: a pair meets in exactly one bucket, so pairs are
+    # already unique — the dedup shuffle is only needed when multiple
+    # bands can emit the same pair
     return out.distinct() if bands > 1 else out
 
 
@@ -694,21 +579,8 @@ def srp_topk_pruned(
     """Multi-probe SRP query against a persisted index: partition-
     pruned scan of the query bucket plus all buckets within
     `probe_hamming` bits."""
-    planes = _hyperplanes(len(query), n_planes, seed)
-    qv = np.asarray(query, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0.0))
-    probes = [qbucket]
-    if probe_hamming >= 1:
-        probes += [qbucket ^ (1 << i) for i in range(n_planes)]
-
+    probes = _srp_probes(query, _hyperplanes(len(query), n_planes, seed), probe_hamming)
     candidates = spark.read.parquet(index_path).filter(
         F.col("srp_bucket").isin(probes)
     )
-    sim = cosine_similarity_col(vec_col, query)
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    return (
-        candidates.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    return _topk(candidates, query, k, id_col, vec_col, round_digits)

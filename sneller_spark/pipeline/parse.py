@@ -14,15 +14,19 @@ a batch" execution shape from pyarrow compute:
 Boundary design (measured, see BENCH/BASELINE.md): the JVM<->Python
 boundary dominates parse cost, and the expensive part is not the Arrow
 IPC itself but the Arrow->pandas "objectification" of the list<int32>
-column (one numpy object per row).  The default kernel is therefore
+column (one numpy object per row).  The kernels therefore run as
 ``mapInArrow`` — RecordBatches in, RecordBatches out, zero pandas —
-measured 3.3x faster than the struct-returning ``pandas_udf`` variant
-at identical results.  Because ``mapInArrow`` replaces the row set,
+measured 3.3x faster than a struct-returning ``pandas_udf`` at
+identical results.  Because ``mapInArrow`` replaces the row set,
 column pruning must be explicit: ``passthrough`` names the columns the
 downstream plan needs; an aggregation-only consumer passes the narrow
 set so the heavy tokens column is read once and never echoed back.
-(``parse_stage_struct_udf`` keeps the pandas_udf form, where Catalyst
-does that pruning automatically, as the composable/scalar variant.)
+
+``parse_stage_dict`` is the production kernel: it evaluates the
+pattern bank once over the vocabulary and extracts by integer gather.
+``parse_stage`` (RE2 over the decoded text) is the bit-identity
+reference it is tested against; the bank is the fixed
+``vocab.PATTERN_BANK``.
 
 ``parse_stage_jvm`` is the pure-Catalyst alternative (literal vocab
 array + regexp_extract, whole-stage codegen, no Python at all).  It
@@ -57,7 +61,6 @@ _ARROW_PATTERNS: dict[str, tuple[str, str]] = {
 assert set(_ARROW_PATTERNS) == set(PATTERN_BANK)
 
 PARSED_FIELDS = ["level", "code", "ip", "lat_ms"]
-PARSED_STRUCT = "level string, code int, ip string, lat_ms int"
 
 _vocab_pa: pa.Array | None = None
 
@@ -106,57 +109,6 @@ def extract_fields_arrow(text: pa.Array) -> dict[str, pa.Array]:
             col = pc.cast(col, pa.int32())
         out[name] = col
     return out
-
-
-def _fields_to_pandas(fields: dict[str, pa.Array]) -> pd.DataFrame:
-    return pd.DataFrame(
-        {k: pd.array(v, dtype=pd.ArrowDtype(v.type)) for k, v in fields.items()}
-    )
-
-
-def _parse_tokens_kernel(tokens: pd.Series) -> pd.DataFrame:
-    pa.set_cpu_count(1)  # one worker per core already; avoid thread thrash
-    arr = tokens_series_to_arrow(tokens)
-    return _fields_to_pandas(extract_fields_arrow(decode_tokens_arrow(arr)))
-
-
-def _parse_tokens_kernel_with_text(tokens: pd.Series) -> pd.DataFrame:
-    pa.set_cpu_count(1)
-    arr = tokens_series_to_arrow(tokens)
-    text = decode_tokens_arrow(arr)
-    out = _fields_to_pandas(extract_fields_arrow(text))
-    out.insert(0, "text", pd.array(text, dtype=pd.ArrowDtype(pa.string())))
-    return out
-
-
-_udf_cache: dict[str, object] = {}
-
-
-def _get_udf(keep_text: bool):
-    # pandas_udf parses its DDL schema eagerly, so the udf object must
-    # be built lazily (after a SparkSession exists), once per process
-    key = "with_text" if keep_text else "plain"
-    if key not in _udf_cache:
-        if keep_text:
-            _udf_cache[key] = F.pandas_udf("text string, " + PARSED_STRUCT)(
-                _parse_tokens_kernel_with_text
-            )
-        else:
-            _udf_cache[key] = F.pandas_udf(PARSED_STRUCT)(_parse_tokens_kernel)
-    return _udf_cache[key]
-
-
-def parse_stage_struct_udf(df: DataFrame, keep_text: bool = False) -> DataFrame:
-    """Scalar-UDF form: tokens in, struct of extracted fields out.
-    Catalyst prunes unused columns around it automatically; slower than
-    the mapInArrow form because the serializer objectifies the list
-    column into per-row numpy arrays."""
-    udf = _get_udf(keep_text)
-    return (
-        df.withColumn("_parsed", udf("tokens"))
-        .select("*", "_parsed.*")
-        .drop("_parsed")
-    )
 
 
 def parse_stage(

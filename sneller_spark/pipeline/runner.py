@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..lookups import lookup_source_df, route_rules_df
-from .aggregate import aggregate_per_sink, aggregate_per_sink_salted
+from .aggregate import aggregate_per_sink_salted
 from .enrich import assert_broadcastable, enrich_join
 from .lineage import LineageLog, UnitManifest, file_identity
 from .parse import parse_stage
@@ -95,8 +95,9 @@ def transform(
     ``kernel``: "dict" (default) evaluates the pattern bank once over
     the vocabulary and extracts by sparse integer gather — ~7x faster
     per core and bit-identical for the built-in bank (tested); "regex"
-    runs RE2 over the decoded text and supports arbitrary patterns;
-    "jvm" is the zero-Python whole-stage-codegen fallback."""
+    runs RE2 over the decoded text and is the bit-identity reference
+    the dict kernel is tested against; "jvm" is the zero-Python
+    whole-stage-codegen fallback."""
     lookup, rules = _broadcast_tables(spark, lookup, rules)
     return _route(df, lookup, rules, passthrough, kernel)
 
@@ -354,8 +355,6 @@ def run_pipeline(
     out_dir: str,
     resume: bool = True,
     max_units: int | None = None,
-    salted: bool = True,
-    salt_buckets: int = 16,
     sketch_col: str | None = None,
     sketch_params: tuple[int, int, int] = (4, 1024, 7),
 ) -> dict:
@@ -494,17 +493,12 @@ def run_pipeline(
     # final aggregates from all committed units (derived state — always
     # consistent with the routed table, regardless of kill/resume).
     # A no-op resume (nothing processed, aggregate already written)
-    # skips the rewrite: salted and unsalted paths produce identical
-    # results, so the existing aggregate is still the derived state.
+    # skips the rewrite: the committed units are unchanged, so the
+    # existing aggregate is still the derived state.
     stats = log.total_stats()
     agg_done = os.path.exists(os.path.join(out_dir, AGG_SUBDIR, "_SUCCESS"))
     if log.committed_units() and (todo or not agg_done):
-        routed_all = read_routed(spark, out_dir)
-        agg = (
-            aggregate_per_sink_salted(routed_all, salt_buckets=salt_buckets)
-            if salted
-            else aggregate_per_sink(routed_all)
-        )
+        agg = aggregate_per_sink_salted(read_routed(spark, out_dir))
         agg.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, AGG_SUBDIR))
     stats["units_processed_this_run"] = len(todo)
     return stats

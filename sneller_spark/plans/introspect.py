@@ -67,9 +67,12 @@ def assert_single_arrow_eval(df: DataFrame) -> None:
 
 def assert_single_python_boundary(df: DataFrame) -> None:
     """Exactly one Python crossing in the whole plan (ArrowEvalPython
-    for scalar UDFs or PythonMapInArrow for the mapInArrow kernel)."""
+    for scalar UDFs, PythonMapInArrow for the mapInArrow kernel or
+    FlatMapGroupsInArrow for a grouped applyInArrow kernel)."""
     text = explain_str(df)
-    n = len(re.findall(r"\(\d+\) (ArrowEvalPython|PythonMapInArrow|MapInArrow)", text))
+    n = len(re.findall(
+        r"\(\d+\) (ArrowEvalPython|PythonMapInArrow|MapInArrow|FlatMapGroupsInArrow)", text
+    ))
     assert n == 1, f"expected exactly 1 python boundary, found {n}:\n{text[:2000]}"
 
 

@@ -519,9 +519,9 @@ def embedding_cosine_near_dup(spark, sf_dir):
        FROM embeddings WHERE vec_id < 20""",
 )
 def embedding_cosine_near_dup_blocked(spark, sf_dir):
-    """Scale path: SRP-bucket blocking self-join + exact cosine
-    re-check — one shuffle on the bucket id, no cross join.  The entry
-    plants 20 exact duplicates (vec_id + 1e6): identical vectors share
+    """Scale path: SRP-bucket blocking + exact cosine re-check of the
+    pairs inside each bucket — one shuffle on the bucket id, no join.
+    The entry plants 20 exact duplicates (vec_id + 1e6): identical vectors share
     every SRP sign bit, so blocking finds them DETERMINISTICALLY, and
     the uniform-random base table has no 0.99-cosine pair to emit (a
     0.99 cosine at 64 dims is an ~8-sigma event) — hence the exact
@@ -717,8 +717,8 @@ def lang_distribution(spark, sf_dir):
 @register("ann_cosine_topk_ivf", None)  # probe pruning: rows-only
 def ann_cosine_topk_ivf(spark, sf_dir):
     """IVF ANN: deterministic mini-kmeans centroids (driver-side
-    sample), JVM-only bucket assignment (partition-prunable at scale),
-    n_probe nearest buckets scanned, exact re-rank.
+    sample), per-row kernel bucket assignment (partition-prunable at
+    scale), n_probe nearest buckets scanned, exact re-rank.
 
     Recall note: the synthetic embeddings are uniform-random (IVF's
     worst case — no cluster structure); measured recall@10 vs exact
@@ -1784,6 +1784,23 @@ def hypertable_rollup_day_from_hour(spark, sf_dir):
     )
 
 
+def _plan_size_bytes(df) -> int:
+    """Catalyst's size estimate for a plan (for parquet scans: the file
+    bytes), read driver-side in O(1) — no job.  Unknown estimates err
+    toward 'big' (repartition), the scale-safe default."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # stats unavailable: assume big
+        return 1 << 62
+
+
+#: below this input size a widening repartition's extra stage costs
+#: more than the added parallelism saves (measured at bench sf0.1:
+#: +0.3-0.5s per query on ~0.6 MB inputs, vs multi-second wins on
+#: >5 MB inputs)
+_WIDEN_MIN_BYTES = 4 << 20
+
+
 @register(
     "sketch_heavy_hitters_exact",
     """SELECT w AS word, COUNT(*) AS n
@@ -1811,10 +1828,8 @@ def sketch_heavy_hitters_exact(spark, sf_dir):
     # reused exchange.  Size-adaptive (plan stats, no job): skipped for
     # sub-4MB inputs where the extra stage costs more than it saves.
     # Row set is unchanged either way.
-    from .operators.similarity import WIDEN_MIN_BYTES, plan_size_bytes
-
     d = load(spark, sf_dir, "documents")
-    if plan_size_bytes(d) >= WIDEN_MIN_BYTES:
+    if _plan_size_bytes(d) >= _WIDEN_MIN_BYTES:
         d = d.repartition(spark.sparkContext.defaultParallelism)
     words = d.select(F.explode(F.split(F.col("text"), r"\s+")).alias("word"))
     return heavy_hitters_exact(words, "word", threshold=500, width=2048)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -479,6 +481,137 @@ def test_cosine_blocked_multiband_matches_exact_on_dups(spark):
     banded = cosine_near_dup_pairs_blocked(df, 0.999, bands=4).toPandas()
     key = lambda p: sorted(zip(p["id_a"], p["id_b"]))  # noqa: E731
     assert key(banded) == key(exact)
+
+
+#: full result rows of the similarity entry points at sf0.001, recorded
+#: from the expression-based implementation this kernel replaced
+PINNED = os.path.join(os.path.dirname(__file__), "similarity_pinned.json")
+
+
+def _ordered(df):
+    return [list(r) for r in df.collect()]
+
+
+def _pairs(df):
+    return sorted(list(r) for r in df.collect())
+
+
+def _similarity_answers(spark, sf_dir, index_dir):
+    from sneller_spark import query_catalog_ml as ml
+    from sneller_spark.operators import similarity as sim
+
+    out = {}
+    for name in ("ann_cosine_topk_brute", "ann_cosine_topk_lsh", "ann_cosine_topk_ivf",
+                 "ann_cosine_topk_ivf_pruned", "ann_cosine_topk_srp_pruned"):
+        out[name] = _ordered(getattr(ml, name)(spark, sf_dir))
+    for name in ("embedding_cosine_near_dup", "embedding_cosine_near_dup_blocked",
+                 "embedding_cosine_near_dup_multiband"):
+        out[name] = _pairs(getattr(ml, name)(spark, sf_dir))
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = ml._query_vec(spark, sf_dir)
+    cent = sim.train_ivf_centroids(e, k=8)
+    out["brute_all_unrounded"] = _ordered(
+        sim.brute_force_cosine_topk(e, q, k=1000, round_digits=None))
+    out["lsh_unrounded"] = _ordered(
+        sim.lsh_bucketed_topk(e, q, k=10, n_planes=6, round_digits=None))
+    out["ivf_unrounded"] = _ordered(
+        sim.ivf_topk(e, q, cent, k=10, n_probe=4, round_digits=None))
+    ivf_path = os.path.join(index_dir, "pin_ivf")
+    sim.write_ivf_index(e, cent, ivf_path)
+    out["ivf_pruned_unrounded"] = _ordered(
+        sim.ivf_topk_pruned(spark, ivf_path, q, cent, k=10, n_probe=4, round_digits=None))
+    srp_path = os.path.join(index_dir, "pin_srp")
+    sim.write_srp_index(e, dim=len(q), path=srp_path, n_planes=6)
+    out["srp_pruned_unrounded"] = _ordered(
+        sim.srp_topk_pruned(spark, srp_path, q, k=10, n_planes=6, round_digits=None))
+    out["ivf_buckets"] = _pairs(sim.ivf_assign_buckets(e, cent).select("vec_id", "_ivf_bucket"))
+    out["srp_buckets"] = _pairs(spark.read.parquet(srp_path).select("vec_id", "srp_bucket"))
+
+    dup = e.filter(F.col("vec_id") < 20).withColumn("vec_id", F.col("vec_id") + F.lit(1000000))
+    src = e.unionByName(dup)
+    configs = [(cap, bands, thr) for cap in (None, 256) for bands in (1, 4)
+               for thr in (0.99, 0.2)]
+    configs += [(4, 1, 0.2), (4, 4, 0.2)]  # caps that do bind: star pairs
+    for cap, bands, thr in configs:
+        got = sim.cosine_near_dup_pairs_blocked(
+            src, threshold=thr, n_planes=8, bands=bands, max_bucket_size=cap)
+        out[f"blocked_cap{cap}_bands{bands}_thr{thr}"] = _pairs(got)
+    return out
+
+
+def test_similarity_answers_pinned(spark, sf_dir, tmp_path, monkeypatch):
+    """Every similarity entry point returns exactly the recorded rows,
+    unrounded cosines and bucket ids included, bit for bit."""
+    import json
+
+    if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+        pytest.skip("answers are pinned for the sf0.001 tables")
+    monkeypatch.setenv("SNELLER_SPARK_INDEX_DIR", str(tmp_path))
+    with open(PINNED) as f:
+        pinned = json.load(f)
+    got = _similarity_answers(spark, sf_dir, str(tmp_path))
+    assert set(got) == set(pinned)
+    for key in pinned:
+        assert got[key] == pinned[key], key
+
+
+#: (vector of row 7, whether every entry point must raise naming it)
+MALFORMED = {
+    "null vector": (None, False),
+    "null element": ([1.0, None, 3.0, 4.0], False),
+    "empty vector": ([], True),
+    "shorter vector": ([1.0, 2.0, 3.0], True),
+    "longer vector": ([1.0, 2.0, 3.0, 4.0, 5.0], True),
+    "zero vector": ([0.0, 0.0, 0.0, 0.0], True),
+}
+
+
+def test_malformed_vectors_follow_one_rule(spark):
+    """One rule in brute force, exact pairs and blocked pairs (one band;
+    four bands with a binding cap), and in the LSH and IVF probes: a
+    null vector or element gives a null similarity, never pairs, sorts
+    last in brute force and is no ANN candidate; a length mismatch or a
+    zero norm raises ValueError naming the row id.  One plane per band
+    makes two buckets per band, and rows 1 and 2 (v and -v) sit in
+    opposite ones, so row 7 always shares a bucket with a well-formed
+    row; the probes cover every bucket."""
+    from sneller_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+        cosine_near_dup_pairs_blocked,
+        ivf_topk,
+    )
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    well_formed = [(1, v), (2, [-x for x in v]), (3, v)]
+    entry_points = {
+        "brute": lambda df: _ordered(
+            brute_force_cosine_topk(df, v, k=10, round_digits=None)),
+        "exact": lambda df: _pairs(cosine_near_dup_pairs(df, 0.5)),
+        "blocked": lambda df: _pairs(
+            cosine_near_dup_pairs_blocked(df, 0.5, n_planes=1)),
+        "blocked_banded_capped": lambda df: _pairs(cosine_near_dup_pairs_blocked(
+            df, 0.5, n_planes=1, bands=4, max_bucket_size=1)),
+        "lsh": lambda df: _ordered(
+            lsh_bucketed_topk(df, v, k=10, n_planes=1, round_digits=None)),
+        "ivf": lambda df: _ordered(ivf_topk(
+            df, v, np.array([well_formed[0][1], well_formed[1][1]]), k=10,
+            round_digits=None)),
+    }
+    schema = "vec_id long, embedding array<float>"
+    clean = spark.createDataFrame(well_formed, schema)
+    for case, (vec, raises) in MALFORMED.items():
+        df = spark.createDataFrame(well_formed + [(7, vec)], schema)
+        for name, run in entry_points.items():
+            if raises:
+                with pytest.raises(Exception, match=r"ValueError: row id 7\b"):
+                    run(df)
+            elif name == "brute":
+                assert run(df) == run(clean) + [[7, None]], (case, name)
+            elif name in ("lsh", "ivf"):
+                assert run(df) == entry_points["brute"](clean), (case, name)
+            else:
+                assert run(df) == run(clean) == [[1, 3, 1.0]], (case, name)
 
 
 def test_connected_components_long_chain_log_rounds(spark):

@@ -18,6 +18,7 @@ from sneller_spark.plans import (
     assert_pushed_filters,
     assert_single_arrow_eval,
     assert_single_python_boundary,
+    explain_str,
     scan_read_schema,
 )
 
@@ -46,16 +47,10 @@ def test_pipeline_joins_are_broadcast(spark, tokens_path):
 
 
 def test_parse_kernel_appears_once(spark, tokens_path):
-    """Both parse forms must cross into Python exactly once; the
-    struct-udf form must not duplicate the kernel per extracted field
-    via projection collapse."""
-    from sneller_spark.pipeline.parse import parse_stage_struct_udf
-
+    """The parse kernel must cross into Python exactly once."""
     df = spark.read.parquet(tokens_path)
     parsed = parse_stage(df).select("doc_id", "level", "code", "ip", "lat_ms")
     assert_single_python_boundary(parsed)
-    parsed2 = parse_stage_struct_udf(df).select("doc_id", "level", "code", "ip", "lat_ms")
-    assert_single_arrow_eval(parsed2)
 
 
 def test_parse_passthrough_prunes_tokens(spark, tokens_path):
@@ -115,8 +110,10 @@ def test_salted_repartition_spreads_hot_key(spark, tokens_path):
 def test_ivf_pruned_index_scans_only_probed_partitions(spark, sf_dir, tmp_path):
     """The persisted-IVF probe must be a partition-pruned scan (the
     expectBytes analog): an IN-list PartitionFilter on ivf_bucket with
-    exactly n_probe values, no Python boundary, and results identical
-    to the query-time-bucketing path with the same centroids."""
+    exactly n_probe values, and results identical to the
+    query-time-bucketing path with the same centroids.  The only Python
+    crossing is the cosine kernel: the bucket comes from the partition
+    directory, not from a kernel call."""
     import numpy as np
 
     from sneller_spark.operators.similarity import (
@@ -135,7 +132,7 @@ def test_ivf_pruned_index_scans_only_probed_partitions(spark, sf_dir, tmp_path):
 
     pruned = ivf_topk_pruned(spark, path, q, cent, k=10, n_probe=2)
     assert_partition_pruned(pruned, "ivf_bucket", n_values=2)
-    assert_no_python_in_plan(pruned)
+    assert_single_arrow_eval(pruned)  # the cosine kernel, nothing else
 
     unpruned = ivf_topk(e, q, cent, k=10, n_probe=2)
     assert [tuple(r) for r in pruned.collect()] == [tuple(r) for r in unpruned.collect()]
@@ -159,10 +156,36 @@ def test_srp_pruned_index_scans_only_probed_partitions(spark, sf_dir, tmp_path):
     pruned = srp_topk_pruned(spark, path, q, k=10, n_planes=6, probe_hamming=1)
     # query bucket + 6 hamming-1 neighbors = 7 probed partitions
     assert_partition_pruned(pruned, "srp_bucket", n_values=7)
-    assert_no_python_in_plan(pruned)
+    assert_single_arrow_eval(pruned)  # the cosine kernel, nothing else
 
     unpruned = lsh_bucketed_topk(e, q, k=10, n_planes=6, probe_hamming=1)
     assert [tuple(r) for r in pruned.collect()] == [tuple(r) for r in unpruned.collect()]
+
+
+def test_blocked_near_dup_has_no_cross_join(spark, sf_dir):
+    """The blocked near-dup enumerates pairs inside each SRP bucket
+    (one shuffle on the bucket id): no nested-loop or cartesian join,
+    with one band or several."""
+    from sneller_spark.operators.similarity import cosine_near_dup_pairs_blocked
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    for bands in (1, 4):
+        text = explain_str(
+            cosine_near_dup_pairs_blocked(e, 0.99, bands=bands, max_bucket_size=256)
+        )
+        assert "BroadcastNestedLoopJoin" not in text, text
+        assert "CartesianProduct" not in text, text
+
+
+def test_exact_near_dup_scores_each_pair_once(spark, sf_dir):
+    """The exact all-pairs form runs its pair kernel in one Python node:
+    no join whose condition and projection both evaluate the cosine."""
+    from sneller_spark.operators.similarity import cosine_near_dup_pairs
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(F.col("vec_id") < 80)
+    pairs = cosine_near_dup_pairs(e, threshold=0.2)
+    assert_single_python_boundary(pairs)
+    assert "Join" not in explain_str(pairs)
 
 
 def test_aqe_skew_join_mitigation_engages(spark):
