@@ -27,7 +27,7 @@ Layout:
   sneller_spark.partiql   Sneller-dialect (PartiQL) query surface:
                           translate()/sql() — the same translator that
                           replays the reference's own 408-case corpus
-                          verbatim (sneller_spark.replay)
+                          verbatim (harness in tools/replay, not shipped)
 """
 
 __version__ = "0.1.0"

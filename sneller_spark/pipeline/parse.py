@@ -1,40 +1,31 @@
-"""Parse stage — decode token ids to text and run the grok/regex
-pattern bank, fully Arrow-vectorized.
+"""Parse stage — extract the pattern-bank fields (level, code, ip,
+lat_ms) from token-id sequences, fully Arrow-vectorized.
 
-This is the Spark analog of Sneller's SIMD string kernels: the
-reference compiles LIKE/SIMILAR TO/regex into NFA->DFA programs for an
-AVX-512 bytecode VM (/root/reference/regexp2/Regexp2.go:14-60,
-/root/reference/vm/evalbc_amd64.s); we get the same "wide kernel over
-a batch" execution shape from pyarrow compute:
-
-  * decode:  ``pc.take(vocab, flat_token_ids)`` + ``pc.binary_join``
-             — two C++ kernels, zero per-row Python;
-  * extract: ``pc.extract_regex`` — RE2 over the whole Arrow column.
+``parse_stage_dict`` is the one production kernel.  Every pattern in
+``vocab.PATTERN_BANK`` matches inside a single token, so the bank runs
+ONCE over the vocabulary (RE2 via ``pc.extract_regex``) and the
+per-batch work is an integer gather over token ids — the Spark analog
+of Sneller's SIMD string kernels, which compile LIKE/regex into
+bytecode run over a whole batch (reference regexp2/Regexp2.go:14-60).
 
 Boundary design (measured, see BENCH/BASELINE.md): the JVM<->Python
 boundary dominates parse cost, and the expensive part is not the Arrow
 IPC itself but the Arrow->pandas "objectification" of the list<int32>
-column (one numpy object per row).  The kernels therefore run as
-``mapInArrow`` — RecordBatches in, RecordBatches out, zero pandas —
-measured 3.3x faster than a struct-returning ``pandas_udf`` at
-identical results.  Because ``mapInArrow`` replaces the row set,
-column pruning must be explicit: ``passthrough`` names the columns the
-downstream plan needs; an aggregation-only consumer passes the narrow
-set so the heavy tokens column is read once and never echoed back.
-
-``parse_stage_dict`` is the production kernel: it evaluates the
-pattern bank once over the vocabulary and extracts by integer gather.
-``parse_stage`` (RE2 over the decoded text) is the bit-identity
-reference it is tested against; the bank is the fixed
-``vocab.PATTERN_BANK``.
+column (one numpy object per row).  The kernel therefore runs as
+``mapInArrow`` — RecordBatches in, RecordBatches out, zero pandas.
+Because ``mapInArrow`` replaces the row set, column pruning must be
+explicit: ``passthrough`` names the columns the downstream plan needs;
+an aggregation-only consumer passes the narrow set so the heavy tokens
+column is read once and never echoed back.
 
 ``parse_stage_jvm`` is the pure-Catalyst alternative (literal vocab
 array + regexp_extract, whole-stage codegen, no Python at all).  It
-produces identical results but measured 4-7x slower — Java regex plus
-a per-extract re-decode — which is exactly the reference's thesis that
-a vectorized kernel layer beats naive per-engine evaluation
-(/root/reference/README.md:10-11).  Kept as a tested fallback for
-UDF-less deployments.
+gives identical results but measured 4-7x slower — Java regex plus a
+per-extract re-decode.  It backs the ``tokens_pipeline_jvm_kernel``
+catalog entry for deployments without Python workers.
+
+The bit-identity reference both are tested against (RE2 over the
+decoded text) lives with the tests, not in this package.
 
 No-match rows carry null extracted fields (Sneller's MISSING -> our
 null; /root/reference/doc/sneller-SQL.md:109-143, SURVEY.md §2.2).
@@ -43,7 +34,6 @@ null; /root/reference/doc/sneller-SQL.md:109-143, SURVEY.md §2.2).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -72,94 +62,6 @@ def _vocab_arrow() -> pa.Array:
     return _vocab_pa
 
 
-def tokens_series_to_arrow(tokens: pd.Series) -> pa.ListArray:
-    """pandas series of int32 numpy arrays -> arrow list<int32>,
-    via one concatenate + offsets (no per-row python iteration)."""
-    vals = tokens.to_numpy()
-    n = len(vals)
-    if n == 0:
-        return pa.ListArray.from_arrays(pa.array([0], type=pa.int32()),
-                                        pa.array([], type=pa.int32()))
-    lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=n)
-    flat = np.concatenate(vals)
-    offsets = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum(lens, out=offsets[1:])
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()),
-        pa.array(flat.astype(np.int32, copy=False), type=pa.int32()),
-    )
-
-
-def decode_tokens_arrow(tokens: pa.Array) -> pa.Array:
-    """list<int32> token ids -> utf8 decoded text, vectorized."""
-    if isinstance(tokens, pa.ChunkedArray):
-        tokens = tokens.combine_chunks()
-    words = pc.take(_vocab_arrow(), tokens.values)
-    word_lists = pa.ListArray.from_arrays(tokens.offsets, words)
-    return pc.binary_join(word_lists, " ")
-
-
-def extract_fields_arrow(text: pa.Array) -> dict[str, pa.Array]:
-    """Run the pattern bank over decoded text; null where no match."""
-    out: dict[str, pa.Array] = {}
-    for name, (pattern, dtype) in _ARROW_PATTERNS.items():
-        struct = pc.extract_regex(text, pattern)
-        col = pc.struct_field(struct, name)
-        if dtype == "int":
-            col = pc.cast(col, pa.int32())
-        out[name] = col
-    return out
-
-
-def parse_stage(
-    df: DataFrame, keep_text: bool = False, passthrough: list[str] | None = None
-) -> DataFrame:
-    """DataFrame (doc_id, tokens, n_tok, source, ...) -> passthrough
-    columns plus extracted pattern-bank fields (level, code, ip,
-    lat_ms).  Arrow-native end to end (mapInArrow).
-
-    ``passthrough`` is the explicit column-pruning handle: pass the
-    narrow set your consumer needs (e.g. ["doc_id", "source", "n_tok"]
-    for aggregation) and the tokens column is consumed by the kernel
-    without being echoed back through the IPC boundary."""
-    from pyspark.sql import types as T
-
-    in_cols = list(df.columns) if passthrough is None else list(passthrough)
-    needed = list(dict.fromkeys(in_cols + ["tokens"]))
-    projected = df.select(*needed)
-    in_schema = {f.name: f for f in projected.schema.fields}
-
-    fields = [in_schema[c] for c in in_cols]
-    if keep_text:
-        fields.append(T.StructField("text", T.StringType()))
-    fields += [
-        T.StructField("level", T.StringType()),
-        T.StructField("code", T.IntegerType()),
-        T.StructField("ip", T.StringType()),
-        T.StructField("lat_ms", T.IntegerType()),
-    ]
-    out_schema = T.StructType(fields)
-    out_names = [f.name for f in fields]
-
-    def run(batches):
-        pa.set_cpu_count(1)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tokens = b.column("tokens")
-            if isinstance(tokens, pa.ChunkedArray):  # defensive
-                tokens = tokens.combine_chunks()
-            text = decode_tokens_arrow(tokens)
-            extracted = extract_fields_arrow(text)
-            cols = [b.column(c) for c in in_cols]
-            if keep_text:
-                cols.append(text)
-            cols += [extracted[n] for n in PARSED_FIELDS]
-            yield pa.RecordBatch.from_arrays(cols, names=out_names)
-
-    return projected.mapInArrow(run, schema=out_schema)
-
-
 # ---------------------------------------------------------------------
 # pure-Catalyst alternative (no Python boundary)
 # ---------------------------------------------------------------------
@@ -172,11 +74,11 @@ _JVM_PATTERNS: dict[str, tuple[str, str | None]] = {
 }
 
 
-def parse_stage_jvm(df: DataFrame, keep_text: bool = False) -> DataFrame:
+def parse_stage_jvm(df: DataFrame) -> DataFrame:
     """Whole-stage-codegen parse: vocab as a literal array column,
     decode via transform+element_at+array_join, extract via
-    regexp_extract.  Identical semantics to parse_stage (tested); kept
-    for environments where Python workers are unavailable."""
+    regexp_extract.  Identical semantics to parse_stage_dict (tested);
+    kept for environments where Python workers are unavailable."""
     vlit = F.lit(build_vocab().tolist())
     text = F.array_join(
         F.transform(F.col("tokens"), lambda t: F.element_at(vlit, t + F.lit(1))), " "
@@ -189,28 +91,7 @@ def parse_stage_jvm(df: DataFrame, keep_text: bool = False) -> DataFrame:
         if cast:
             c = c.cast(cast)
         cols.append(c.alias(name))
-    out = out.select("*", *cols)
-    return out.withColumnRenamed("_text", "text") if keep_text else out.drop("_text")
-
-
-def decode_texts_np(token_arrays: list[np.ndarray]) -> list[str]:
-    """Convenience: decode a list of numpy token arrays to strings."""
-    arr = pa.array(token_arrays, type=pa.list_(pa.int32()))
-    return decode_tokens_arrow(arr).to_pylist()
-
-
-def parse_batch(pdf: pd.DataFrame, keep_text: bool = False) -> pd.DataFrame:
-    """Arrow-vectorized parse of one pandas batch (kernel-level entry,
-    used by unit tests and the oracle cross-check)."""
-    arr = tokens_series_to_arrow(pdf["tokens"])
-    text = decode_tokens_arrow(arr)
-    fields = extract_fields_arrow(text)
-    out = pdf.copy()
-    if keep_text:
-        out["text"] = text.to_pandas()
-    for name, arr2 in fields.items():
-        out[name] = pd.array(arr2, dtype=pd.ArrowDtype(arr2.type))
-    return out
+    return out.select("*", *cols).drop("_text")
 
 
 # ---------------------------------------------------------------------
@@ -226,8 +107,9 @@ def parse_batch(pdf: pd.DataFrame, keep_text: bool = False) -> pd.DataFrame:
 # look up token ids.  This is dictionary-encoded predicate pushdown —
 # the same trick parquet readers use on dictionary pages, and the
 # moral twin of zion's evaluate-on-the-compressed-form design
-# (/root/reference/ion/zion/doc.go:15-29).  The regex kernel above
-# remains the semantic source of truth; equality is enforced in tests.
+# (reference ion/zion/doc.go:15-29).  Regex over the decoded
+# text remains the semantic source of truth; the tests enforce equality
+# against that reference.
 
 _dict_tables: dict[str, tuple[np.ndarray, np.ndarray]] | None = None
 

@@ -35,8 +35,8 @@ from ..lookups import lookup_source_df, route_rules_df
 from .aggregate import aggregate_per_sink_salted
 from .enrich import assert_broadcastable, enrich_join
 from .lineage import LineageLog, UnitManifest, file_identity
-from .parse import parse_stage
-from .route import route_join
+from .parse import parse_stage_dict
+from .route import route_join, write_routed
 
 ROUTED_SUBDIR = "routed"
 AGG_SUBDIR = "aggregates"
@@ -82,24 +82,20 @@ def transform(
     lookup: DataFrame | None = None,
     rules: DataFrame | None = None,
     passthrough: list[str] | None = None,
-    kernel: str = "dict",
 ) -> DataFrame:
     """The pure transformation: input rows -> routed, enriched rows.
+
+    Parses with ``parse_stage_dict``, which evaluates the pattern bank
+    once over the vocabulary and extracts by sparse integer gather,
+    then runs the broadcast enrich and route joins.
 
     ``passthrough`` limits which input columns survive the parse kernel
     (explicit column pruning through the Arrow boundary): routing sinks
     need everything (default); an aggregation-only consumer should pass
     ["doc_id", "source", "n_tok"] so the tokens column is never echoed
-    back out of the kernel.
-
-    ``kernel``: "dict" (default) evaluates the pattern bank once over
-    the vocabulary and extracts by sparse integer gather — ~7x faster
-    per core and bit-identical for the built-in bank (tested); "regex"
-    runs RE2 over the decoded text and is the bit-identity reference
-    the dict kernel is tested against; "jvm" is the zero-Python
-    whole-stage-codegen fallback."""
+    back out of the kernel."""
     lookup, rules = _broadcast_tables(spark, lookup, rules)
-    return _route(df, lookup, rules, passthrough, kernel)
+    return _route(df, lookup, rules, passthrough)
 
 
 def _broadcast_tables(
@@ -121,26 +117,9 @@ def _route(
     lookup: DataFrame,
     rules: DataFrame,
     passthrough: list[str] | None = None,
-    kernel: str = "dict",
 ) -> DataFrame:
     """``transform`` over tables ``_broadcast_tables`` already guarded."""
-    if kernel == "dict":
-        from .parse import parse_stage_dict
-
-        parsed = parse_stage_dict(df, passthrough=passthrough)
-    elif kernel == "jvm":
-        # zero-Python plan: vocab-literal decode + regexp_extract,
-        # whole-stage codegen end to end (slower per core, but runs
-        # where Python workers are unavailable)
-        from .parse import parse_stage_jvm
-
-        parsed = parse_stage_jvm(df)
-        if passthrough is not None:
-            from .parse import PARSED_FIELDS
-
-            parsed = parsed.select(*passthrough, *PARSED_FIELDS)
-    else:
-        parsed = parse_stage(df, passthrough=passthrough)
+    parsed = parse_stage_dict(df, passthrough=passthrough)
     return route_join(enrich_join(parsed, lookup), rules)
 
 
@@ -317,7 +296,7 @@ def _run_unit(
     unit_dir = os.path.join(routed_dir, f"unit={unit_id}")
     try:
         # idempotent overwrite of THIS unit's directory only
-        routed.write.mode("overwrite").partitionBy("sink_id").parquet(unit_dir)
+        write_routed(routed, unit_dir)
 
         if sketch_col is not None:
             # sketch BEFORE the commit: a committed unit therefore

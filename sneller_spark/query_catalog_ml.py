@@ -235,17 +235,20 @@ def tokens_pipeline_flagship(spark, sf_dir):
 @register("tokens_pipeline_jvm_kernel", _FLAGSHIP_AGG_ORACLE)
 def tokens_pipeline_jvm_kernel(spark, sf_dir):
     """Same DAG, same oracle, ZERO-Python kernel: vocab-literal decode
-    + regexp_extract under whole-stage codegen (transform(kernel=
-    'jvm')).  A green row here proves the three parse kernels are
+    + regexp_extract under whole-stage codegen (``parse_stage_jvm``).
+    A green row here proves the JVM and production parse kernels are
     interchangeable at the driver gate, not just in pytest."""
+    from .lookups import lookup_source_df, route_rules_df
     from .pipeline.aggregate import aggregate_per_sink_salted
-    from .pipeline.runner import transform
+    from .pipeline.enrich import enrich_stage
+    from .pipeline.parse import PARSED_FIELDS, parse_stage_jvm
+    from .pipeline.route import route_stage
 
     d = _ensure_flagship_inputs()
     df = spark.read.parquet(os.path.join(d, "input.parquet"))
-    return aggregate_per_sink_salted(
-        transform(spark, df, passthrough=["doc_id", "source", "n_tok"], kernel="jvm")
-    )
+    parsed = parse_stage_jvm(df).select("doc_id", "source", "n_tok", *PARSED_FIELDS)
+    enriched = enrich_stage(parsed, lookup_source_df(spark))
+    return aggregate_per_sink_salted(route_stage(enriched, route_rules_df(spark)))
 
 
 # =====================================================================
@@ -887,7 +890,7 @@ def routed_rows_equality(spark, sf_dir):
     df = spark.read.parquet(os.path.join(d, "input.parquet")).filter(
         F.col("doc_id") < "doc-0000001000"
     )
-    routed = transform(spark, df, kernel="dict")
+    routed = transform(spark, df)
     return routed.select(
         "doc_id",
         "source",

@@ -108,6 +108,23 @@ def default_driver_memory() -> str:
 _shipped: set[int] = set()
 
 
+def write_package_zip(zpath: str) -> str:
+    """Write every ``.py`` file of the sneller_spark package into the
+    zip ``zpath`` (paths relative to the package's parent directory,
+    as ``--py-files`` expects) and return ``zpath``."""
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for dirpath, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(dirpath, fn)
+                    zf.write(full, os.path.relpath(full, root))
+    return zpath
+
+
 def ship_package(spark: SparkSession) -> None:
     """Ship the sneller_spark package to Python workers — the
     in-process analog of ``spark-submit --py-files sneller_spark.zip``.
@@ -118,19 +135,10 @@ def ship_package(spark: SparkSession) -> None:
     key = id(sc)
     if key in _shipped:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
     import tempfile
-    import zipfile
 
     zpath = os.path.join(tempfile.gettempdir(), f"sneller_spark_pyfiles_{os.getpid()}.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, root))
-    sc.addPyFile(zpath)
+    sc.addPyFile(write_package_zip(zpath))
     _shipped.add(key)
 
 

@@ -1,14 +1,22 @@
-"""Parse-stage correctness: Arrow kernels vs the independent pandas
-oracle, plus motif ground-truth checks."""
+"""Parse-stage correctness: the production dict kernel and the JVM
+kernel vs the regex reference (tests/parse_reference.py) and the
+independent pandas oracle, plus motif ground-truth checks."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
+from parse_reference import (
+    decode_texts_np,
+    decode_tokens_arrow,
+    extract_fields_arrow,
+    parse_batch,
+    tokens_series_to_arrow,
+)
+
 from sneller_spark.datagen import generate_chunk
 from sneller_spark.oracle import parse_pdf
-from sneller_spark.pipeline.parse import decode_texts_np, parse_batch
 from sneller_spark.vocab import MOTIF_BASE, build_vocab, motif_ground_truth
 
 
@@ -66,10 +74,12 @@ def test_no_match_is_null():
 
 
 def test_jvm_parse_equals_arrow_parse(spark):
-    """parse_stage (Arrow UDF) and parse_stage_jvm (pure Catalyst) must
-    agree on every extracted field."""
+    """parse_stage (regex reference, Arrow UDF) and parse_stage_jvm
+    (pure Catalyst) must agree on every extracted field."""
+    from parse_reference import parse_stage
+
     from sneller_spark.datagen import TOKENS_SCHEMA, generate_chunk
-    from sneller_spark.pipeline.parse import parse_stage, parse_stage_jvm
+    from sneller_spark.pipeline.parse import parse_stage_jvm
 
     pdf = generate_chunk(0, 3000)
     df = spark.createDataFrame(pdf, schema=TOKENS_SCHEMA).repartition(8)
@@ -85,12 +95,7 @@ def test_jvm_parse_equals_arrow_parse(spark):
 def test_dict_kernel_equals_regex_kernel():
     """Dictionary-accelerated extraction must be bit-identical to the
     regex-over-decoded-text kernel on a large generated batch."""
-    from sneller_spark.pipeline.parse import (
-        decode_tokens_arrow,
-        extract_fields_arrow,
-        extract_fields_dict,
-        tokens_series_to_arrow,
-    )
+    from sneller_spark.pipeline.parse import extract_fields_dict
 
     pdf = generate_chunk(50_000, 80_000)
     arr = tokens_series_to_arrow(pdf["tokens"])
@@ -127,11 +132,7 @@ def test_dict_kernel_empty_and_null_tokens():
     the round-1 IndexError)."""
     import pyarrow as pa
 
-    from sneller_spark.pipeline.parse import (
-        decode_tokens_arrow,
-        extract_fields_arrow,
-        extract_fields_dict,
-    )
+    from sneller_spark.pipeline.parse import extract_fields_dict
     from sneller_spark.vocab import MOTIF_BASE
 
     cases = [
@@ -189,11 +190,7 @@ def test_dict_equals_regex_kernel_hypothesis():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from sneller_spark.pipeline.parse import (
-        decode_tokens_arrow,
-        extract_fields_arrow,
-        extract_fields_dict,
-    )
+    from sneller_spark.pipeline.parse import extract_fields_dict
     from sneller_spark.vocab import VOCAB_SIZE
 
     rows = st.lists(
@@ -222,11 +219,7 @@ def test_dict_kernel_on_sliced_arrays():
     (round-2 review bug: pre-slice motifs leaked into row -1)."""
     import pyarrow as pa
 
-    from sneller_spark.pipeline.parse import (
-        decode_tokens_arrow,
-        extract_fields_arrow,
-        extract_fields_dict,
-    )
+    from sneller_spark.pipeline.parse import extract_fields_dict
     from sneller_spark.vocab import MOTIF_BASE
 
     base = pa.array(

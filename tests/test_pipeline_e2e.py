@@ -11,10 +11,13 @@ import pandas as pd
 import pytest
 
 from sneller_spark.datagen import TOKENS_SCHEMA, generate_chunk, generate_tokens_df
+from sneller_spark.lookups import lookup_source_df, route_rules_df
 from sneller_spark.oracle import aggregate_pdf, run_oracle
 from sneller_spark.pipeline import (
     aggregate_per_sink,
     aggregate_per_sink_salted,
+    enrich_stage,
+    route_stage,
 )
 from sneller_spark.pipeline.runner import transform
 
@@ -128,13 +131,16 @@ def test_oracle_aggregate_consistency(oracle_out):
 
 
 def test_jvm_kernel_transform_matches_oracle(spark, input_pdf, oracle_out):
-    """transform(kernel='jvm') — the zero-Python whole-stage-codegen
-    path — must aggregate identically to the oracle (and therefore to
-    the dict/regex kernels)."""
+    """parse_stage_jvm — the zero-Python whole-stage-codegen path —
+    composed with enrich, route and the salted aggregate as the
+    ``tokens_pipeline_jvm_kernel`` catalog entry does, must aggregate
+    identically to the oracle (and therefore to the dict kernel)."""
+    from sneller_spark.pipeline.parse import PARSED_FIELDS, parse_stage_jvm
+
     _, exp_agg = oracle_out
     df = _spark_input(spark, input_pdf, 8)
-    agg = aggregate_per_sink_salted(
-        transform(spark, df, passthrough=["doc_id", "source", "n_tok"], kernel="jvm")
-    )
+    parsed = parse_stage_jvm(df).select("doc_id", "source", "n_tok", *PARSED_FIELDS)
+    enriched = enrich_stage(parsed, lookup_source_df(spark))
+    agg = aggregate_per_sink_salted(route_stage(enriched, route_rules_df(spark)))
     got = _norm_agg(agg.toPandas())
     pd.testing.assert_frame_equal(got, _norm_agg(exp_agg))

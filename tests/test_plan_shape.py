@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from sneller_spark.datagen import TOKENS_SCHEMA, generate_chunk
 from sneller_spark.lookups import lookup_source_df, route_rules_df
 from sneller_spark.pipeline.enrich import enrich_stage
-from sneller_spark.pipeline.parse import parse_stage, parse_stage_jvm
+from sneller_spark.pipeline.parse import parse_stage_dict, parse_stage_jvm
 from sneller_spark.pipeline.route import route_stage
 from sneller_spark.plans import (
     assert_broadcast_join,
@@ -41,7 +41,7 @@ def test_filter_and_projection_pushdown(spark, sf_dir):
 def test_pipeline_joins_are_broadcast(spark, tokens_path):
     df = spark.read.parquet(tokens_path)
     routed = route_stage(
-        enrich_stage(parse_stage(df), lookup_source_df(spark)), route_rules_df(spark)
+        enrich_stage(parse_stage_dict(df), lookup_source_df(spark)), route_rules_df(spark)
     )
     assert_broadcast_join(routed, count=2)  # enrich + route, never shuffle joins
 
@@ -49,7 +49,7 @@ def test_pipeline_joins_are_broadcast(spark, tokens_path):
 def test_parse_kernel_appears_once(spark, tokens_path):
     """The parse kernel must cross into Python exactly once."""
     df = spark.read.parquet(tokens_path)
-    parsed = parse_stage(df).select("doc_id", "level", "code", "ip", "lat_ms")
+    parsed = parse_stage_dict(df).select("doc_id", "level", "code", "ip", "lat_ms")
     assert_single_python_boundary(parsed)
 
 
@@ -57,7 +57,7 @@ def test_parse_passthrough_prunes_tokens(spark, tokens_path):
     """With a narrow passthrough, the kernel's output schema omits the
     heavy tokens column entirely."""
     df = spark.read.parquet(tokens_path)
-    out = parse_stage(df, passthrough=["doc_id", "source", "n_tok"])
+    out = parse_stage_dict(df, passthrough=["doc_id", "source", "n_tok"])
     assert "tokens" not in out.columns
     assert set(out.columns) == {"doc_id", "source", "n_tok", "level", "code", "ip", "lat_ms"}
 

@@ -6,7 +6,8 @@ can't reach.
 Each seeded case builds an adversarial frame (empty token arrays,
 length-1 rows, boundary token ids, motifs at first/last position,
 adjacent motifs, duplicate doc_ids, the occasional null source) and runs
-it through the FULL pipeline — both parse kernels — comparing routed
+it through the FULL pipeline — the production dict kernel and the
+regex reference (tests/parse_reference.py) — comparing routed
 rows (token-array equality per BASELINE.json) and per-sink aggregates
 against the independent pandas oracle.
 """
@@ -17,9 +18,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 import pytest
+from parse_reference import parse_stage
 
 from sneller_spark.datagen import SOURCES, TOKENS_SCHEMA
+from sneller_spark.lookups import lookup_source_df, route_rules_df
 from sneller_spark.oracle import run_oracle
+from sneller_spark.pipeline.enrich import enrich_join
+from sneller_spark.pipeline.route import route_join
 from sneller_spark.pipeline.runner import transform
 from sneller_spark.vocab import MOTIF_BASE, N_MOTIFS, VOCAB_SIZE
 
@@ -81,6 +86,15 @@ def _canon_agg(pdf: pd.DataFrame) -> list[tuple]:
     return sorted(out, key=lambda t: tuple("" if v is None else str(v) for v in t))
 
 
+def _transform(spark, df, kernel: str):
+    """``transform`` with the production kernel, or the same enrich and
+    route joins over the regex reference kernel."""
+    if kernel == "dict":
+        return transform(spark, df)
+    enriched = enrich_join(parse_stage(df), lookup_source_df(spark))
+    return route_join(enriched, route_rules_df(spark))
+
+
 @pytest.mark.parametrize("seed", range(N_CASES))
 @pytest.mark.parametrize("kernel", ["dict", "regex"])
 def test_random_shapes_match_oracle(spark, seed, kernel):
@@ -88,13 +102,13 @@ def test_random_shapes_match_oracle(spark, seed, kernel):
     exp_routed, exp_agg = run_oracle(pdf)
 
     df = spark.createDataFrame(pdf, schema=TOKENS_SCHEMA)
-    routed = transform(spark, df, kernel=kernel).toPandas()
+    routed = _transform(spark, df, kernel).toPandas()
     assert _canon_routed(routed) == _canon_routed(exp_routed), f"seed={seed}"
 
     from sneller_spark.pipeline.aggregate import aggregate_per_sink_salted
 
     got_agg = aggregate_per_sink_salted(
-        transform(spark, df, kernel=kernel)
+        _transform(spark, df, kernel)
     ).toPandas()
     assert _canon_agg(got_agg) == _canon_agg(exp_agg), f"seed={seed}"
 

@@ -2,7 +2,7 @@
 
 ``tests/replay_manifest.txt`` lists every reference test case
 (/root/reference/vm/testdata/queries/**/*.test) that
-``sneller_spark.replay`` currently passes verbatim — parsed, translated
+``tools.replay.replay`` currently passes verbatim — parsed, translated
 to Spark SQL, executed, and value-compared against the reference's own
 expected NDJSON.  This test re-runs all of them and fails if ANY
 regresses; extend the manifest with ``python tools/replay_report.py
@@ -17,7 +17,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay
+from tools.replay import replay
 
 MANIFEST = os.path.join(os.path.dirname(__file__), "replay_manifest.txt")
 

@@ -1,4 +1,4 @@
-"""Benchmark-corpus replay (sneller_spark.replay_bench).
+"""Benchmark-corpus replay (tools.replay.replay_bench).
 
 Every micro-benchmark the reference ships
 (/root/reference/vm/testdata/benchmarks/**/*.bench, vm/bench_test.go)
@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_bench
+from tools.replay import replay_bench
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(replay_bench.BENCHMARKS),

@@ -1,5 +1,5 @@
 """Request-only dashboard-capture replay
-(sneller_spark.replay_dashboards): the proxy's 9 dashboard-cloud-trail
+(tools.replay.replay_dashboards): the proxy's 9 dashboard-cloud-trail
 + 15 dashboard-global-flight recorded Kibana requests, each executed
 through the Elastic adapter on a deterministic table and checked
 against a hand-written Spark SQL oracle (no recorded SQL exists for
@@ -11,7 +11,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_dashboards as rd
+from tools.replay import replay_dashboards as rd
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(os.path.join(rd.REF_ROOT, "dashboard-cloud-trail")),

@@ -1,4 +1,4 @@
-"""Kibana-dashboard corpus cross-validation (sneller_spark.replay_elastic).
+"""Kibana-dashboard corpus cross-validation (tools.replay.replay_elastic).
 
 Each of the reference proxy's 12 flights-dashboard scenarios runs both
 the raw Kibana request (through adapters.elastic) and the reference's
@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_elastic
+from tools.replay import replay_elastic
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(replay_elastic.KIBANA),

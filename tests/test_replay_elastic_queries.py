@@ -1,5 +1,5 @@
 """Standalone recorded-request corpus replay
-(sneller_spark.replay_elastic_queries): the proxy's 12 raw client
+(tools.replay.replay_elastic_queries): the proxy's 12 raw client
 request bodies outside the dashboard suite, each executed through the
 Elastic adapter and compared against a hand-written Spark SQL oracle
 on one synthesized table."""
@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_elastic_queries as req
+from tools.replay import replay_elastic_queries as req
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(req.REF_DIR),

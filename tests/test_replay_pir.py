@@ -1,4 +1,4 @@
-"""Planner-corpus replay (sneller_spark.replay_pir).
+"""Planner-corpus replay (tools.replay.replay_pir).
 
 Every build test of the reference's PIR planner
 (/root/reference/plan/pir/testdata/build/**/*.test) must translate and
@@ -16,7 +16,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_pir
+from tools.replay import replay_pir
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(replay_pir.PIR_BUILD),

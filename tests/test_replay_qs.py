@@ -1,4 +1,4 @@
-"""query_string corpus cross-validation (sneller_spark.replay_qs).
+"""query_string corpus cross-validation (tools.replay.replay_qs).
 
 Every case from the reference's qs_parser_test.go (24 full query
 strings) and qs_test.go (9 typed field expressions) runs both through
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from sneller_spark import replay_qs
+from tools.replay import replay_qs
 
 
 @pytest.mark.parametrize("idx", range(len(replay_qs.PARSER_CASES)))

@@ -1,4 +1,4 @@
-"""testqueries corpus replay (sneller_spark.replay_query_converter):
+"""testqueries corpus replay (tools.replay.replay_query_converter):
 all 24 recorded query→SQL pairs from query_converter_test.go run both
 through the Elastic adapter and through the reference's recorded SQL
 via the PartiQL surface; row-id sets must agree."""
@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_query_converter as rqc
+from tools.replay import replay_query_converter as rqc
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(rqc.REF_DIR),

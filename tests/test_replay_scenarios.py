@@ -1,4 +1,4 @@
-"""Full recorded-scenario replay (sneller_spark.replay_scenarios):
+"""Full recorded-scenario replay (tools.replay.replay_scenarios):
 the proxy's 26 testdata-new flights dashboards + 8 testdata-news
 query_string searches, every bucket CTE / total-count / hits
 subquery of the recorded WITH-form SQL cross-validated against the
@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_scenarios as rs
+from tools.replay import replay_scenarios as rs
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(rs.REF_NEW),

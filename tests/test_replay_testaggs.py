@@ -1,4 +1,4 @@
-"""testaggs corpus replay (sneller_spark.replay_testaggs): every
+"""testaggs corpus replay (tools.replay.replay_testaggs): every
 bucket CTE in the proxy's 9 recorded aggregation translations
 executes verbatim through the PartiQL surface and must agree with
 the matching aggs slice run through the Elastic adapter."""
@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_testaggs as rta
+from tools.replay import replay_testaggs as rta
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(rta.REF_DIR),

@@ -1,4 +1,4 @@
-"""CSV/TSV converter test-vector replay (sneller_spark.replay_xsv).
+"""CSV/TSV converter test-vector replay (tools.replay.replay_xsv).
 
 Every conversion vector the reference's xsv package ships (csv/tsv +
 hints -> expected ion rows) must convert identically through the
@@ -11,7 +11,7 @@ import os
 
 import pytest
 
-from sneller_spark import replay_xsv
+from tools.replay import replay_xsv
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(replay_xsv.XSV),

@@ -25,7 +25,7 @@ from pathlib import Path
 
 import pytest
 
-from sneller_spark.replay_scenarios import (
+from tools.replay.replay_scenarios import (
     ALLOWED_EMPTY,
     FLIGHTS_MAPPING,
     NEWS_MAPPING,
@@ -35,7 +35,7 @@ from sneller_spark.replay_scenarios import (
     build_news,
     list_scenarios,
 )
-from sneller_spark.replay_testaggs import _bucket_sql, _canon, split_with
+from tools.replay.replay_testaggs import _bucket_sql, _canon, split_with
 
 pytestmark = pytest.mark.skipif(
     not Path(REF_NEW).is_dir(), reason="reference artifacts not present")

@@ -1,5 +1,5 @@
 """Direct unit tests for the round-6 translator rewrite passes
-(sneller_spark.replay.translate) — pure text in/out, no SparkSession.
+(sneller_spark.partiql.translate) — pure text in/out, no SparkSession.
 
 These pin the fixes from the round-6 review: item-scoped GROUP BY
 alias binding, literal expression insertion, UNION-branch scoping,
@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from sneller_spark.replay import translate
+from sneller_spark.partiql import translate
 
 
 def test_groupby_alias_binds_select_item():

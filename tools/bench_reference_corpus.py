@@ -18,9 +18,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sneller_spark import replay_bench  # noqa: E402
 from sneller_spark.session import get_spark  # noqa: E402
 from sneller_spark.sql_registry import register_sql_functions  # noqa: E402
+from tools.replay import replay_bench  # noqa: E402
 
 
 def main() -> None:

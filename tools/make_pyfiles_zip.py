@@ -3,22 +3,18 @@
 from __future__ import annotations
 
 import os
-import zipfile
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from sneller_spark.session import write_package_zip  # noqa: E402
 
 
 def main() -> str:
     dist = os.path.join(REPO, "dist")
     os.makedirs(dist, exist_ok=True)
-    zpath = os.path.join(dist, "sneller_spark.zip")
-    pkg = os.path.join(REPO, "sneller_spark")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for dirpath, _dirs, files in os.walk(pkg):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, REPO))
+    zpath = write_package_zip(os.path.join(dist, "sneller_spark.zip"))
     print(zpath)
     return zpath
 

@@ -6,7 +6,8 @@ vm/bench_test.go): SQL, then either an inline ``---``-separated input
 NDJSON section or a ``FROM 'relative/path.jsonrl'`` dataset reference;
 the harness replicates the small input to size and measures rows/s.
 This module runs the same queries through the dialect translator
-(``replay.translate``) over the same inputs replicated the same way:
+(``sneller_spark.partiql.translate``) over the same inputs replicated
+the same way:
 
 - :func:`run_bench_case` — execute once at small replication; the
   pytest suite asserts all 53 translate and execute (the correctness
@@ -24,6 +25,8 @@ from __future__ import annotations
 import os
 import re
 import time
+
+from sneller_spark.partiql import _ensure_sn_udfs, translate
 
 from . import replay
 
@@ -70,10 +73,10 @@ def parse_bench_case(path: str) -> tuple[str, list[str]]:
 
 
 def _prepare(spark, query: str, lines: list[str], repl: int):
-    replay.ensure_replay_udfs(spark)
+    _ensure_sn_udfs(spark)
     df, _ = replay.load_input(spark, lines * repl)
     df.createOrReplaceTempView("input")
-    return replay.translate(query)
+    return translate(query)
 
 
 def run_bench_case(spark, path: str, repl: int = 8) -> dict:

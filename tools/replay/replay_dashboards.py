@@ -368,7 +368,7 @@ def run_case(spark, rel: str) -> dict:
     wins.  Adapter results compare to the oracle as sorted value
     multisets over the (asserted-equal) column-name sets."""
     from .replay_testaggs import _canon
-    from .adapters.elastic import ElasticDslError, elastic_search
+    from sneller_spark.adapters.elastic import ElasticDslError, elastic_search
 
     body = json.load(open(os.path.join(REF_ROOT, rel)))
     is_ct = rel.startswith("dashboard-cloud-trail/")

@@ -123,8 +123,8 @@ def run_scenario(spark, name: str) -> dict:
     """Execute one dashboard scenario on both surfaces and compare."""
     from pyspark.sql import functions as F
 
-    from . import partiql
-    from .adapters.elastic import elastic_search
+    from sneller_spark import partiql
+    from sneller_spark.adapters.elastic import elastic_search
 
     body = json.load(open(os.path.join(KIBANA, f"{name}-step1-query.json")))
     ref_sql = open(os.path.join(KIBANA, f"{name}-step2-query.sql")).read()

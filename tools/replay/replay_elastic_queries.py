@@ -141,7 +141,7 @@ def build_table(spark):
 
 def run_case(spark, fname: str) -> dict:
     """Execute one recorded request body and its oracle; compare."""
-    from .adapters.elastic import elastic_search
+    from sneller_spark.adapters.elastic import elastic_search
 
     body = json.load(open(os.path.join(REF_DIR, fname)))
     t = build_table(spark)

@@ -10,8 +10,9 @@ joins — which on this engine is Catalyst's job, so the plans are not
 comparable line-by-line.  What IS checkable, and what this module
 checks:
 
-1. every corpus query translates (``replay.translate``) and **executes**
-   on Spark over tables synthesized from the expected plan's own
+1. every corpus query translates (``sneller_spark.partiql.translate``)
+   and **executes** on Spark over tables synthesized from the expected
+   plan's own
    ``ITERATE <tbl> FIELDS [...]`` schema lines, and
 2. where the reference's split plan contains a partial/merge aggregate
    (``.PARTIAL(`` / ``SUM_COUNT(`` / ``.MERGE(``), Spark's physical
@@ -34,6 +35,8 @@ from __future__ import annotations
 import json
 import os
 import re
+
+from sneller_spark.partiql import _ensure_sn_udfs, translate
 
 from . import replay
 
@@ -209,7 +212,7 @@ def run_pir_case(spark, path: str) -> dict:
         query, tables = parse_pir_case(path)
     except Exception as exc:  # noqa: BLE001
         return {"case": rel, "status": "parse-error", "detail": str(exc)[:300]}
-    replay.ensure_replay_udfs(spark)
+    _ensure_sn_udfs(spark)
     prev_ansi = spark.conf.get("spark.sql.ansi.enabled", None)
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
@@ -218,7 +221,7 @@ def run_pir_case(spark, path: str) -> dict:
             lines = override.get(tbl) or synthesize_table(query, fields)
             df, _ = replay.load_input(spark, lines)
             df.createOrReplaceTempView(tbl)
-        sql = replay.translate(query)
+        sql = translate(query)
         df = rows = None
         for attempt in range(4):
             try:

@@ -168,7 +168,7 @@ def _expected_ids(spark, expected_sql: str) -> list[int]:
     """Run the reference's recorded SQL predicate through the PartiQL
     translator (the proxy emits `"$source"` as the row alias; on a
     flat FROM it is the row itself, so the prefix erases)."""
-    from . import partiql
+    from sneller_spark import partiql
 
     pred = expected_sql.replace('"$source".', "")
     # ansi=false: the reference never aborts a query — failed casts
@@ -181,7 +181,7 @@ def _expected_ids(spark, expected_sql: str) -> list[int]:
 
 def run_parser_case(spark, idx: int) -> dict:
     """qs_parser_test.go case `idx`: full query string both ways."""
-    from .adapters.qs import qs_to_column
+    from sneller_spark.adapters.qs import qs_to_column
 
     query, expected = PARSER_CASES[idx]
     t = build_table(spark)
@@ -199,7 +199,7 @@ def run_parser_case(spark, idx: int) -> dict:
 
 def run_field_case(spark, idx: int) -> dict:
     """qs_test.go case `idx`: one qsFieldExpression both ways."""
-    from .adapters import qs
+    from sneller_spark.adapters import qs
 
     field, value, vtype, expected = FIELD_CASES[idx]
     t = build_table(spark)

@@ -114,8 +114,8 @@ def list_cases() -> list[str]:
 
 
 def run_case(spark, name: str) -> dict:
-    from . import partiql
-    from .adapters.elastic import elastic_search
+    from sneller_spark import partiql
+    from sneller_spark.adapters.elastic import elastic_search
 
     q = json.load(open(os.path.join(REF_DIR, f"{name}.json")))
     expected = open(os.path.join(REF_DIR, f"{name}.json.sql")).read()

@@ -142,7 +142,7 @@ def _strip_pipeline(aggs: dict) -> dict:
 
 def _slice_for(aggs: dict, outer: str, inner: str | None) -> dict:
     """Cut the aggs slice that produces one bucket CTE."""
-    from .adapters.elastic import _BUCKET_KINDS
+    from sneller_spark.adapters.elastic import _BUCKET_KINDS
 
     if outer == "":  # "$bucket:%0" — the metrics-only bucket
         return {n: s for n, s in aggs.items()
@@ -151,7 +151,7 @@ def _slice_for(aggs: dict, outer: str, inner: str | None) -> dict:
     sub = _strip_pipeline(spec.get("aggs") or {})
     if inner is None:
         # outer level alone: drop nested bucket sub-aggs
-        from .adapters.elastic import _BUCKET_KINDS, _filter_metric_like
+        from sneller_spark.adapters.elastic import _BUCKET_KINDS, _filter_metric_like
 
         sub = {n: s for n, s in sub.items()
                if not set(s) & _BUCKET_KINDS or _filter_metric_like(s)}
@@ -192,7 +192,7 @@ def _colmap(cte_cols: list[str], inner: str | None) -> list[tuple[str, str]]:
 
 
 def _cte_cols(spark, ctes, target, view) -> list[str]:
-    from . import partiql
+    from sneller_spark import partiql
 
     sql = _bucket_sql(ctes, target, ["*"], view=view).replace(
         'SELECT "*"', "SELECT *")
@@ -200,8 +200,8 @@ def _cte_cols(spark, ctes, target, view) -> list[str]:
 
 
 def run_scenario(spark, directory: str, name: str) -> dict:
-    from . import partiql
-    from .adapters.elastic import elastic_search
+    from sneller_spark import partiql
+    from sneller_spark.adapters.elastic import elastic_search
 
     is_news = directory == REF_NEWS
     t = build_news(spark) if is_news else build_flights(spark)

@@ -250,8 +250,8 @@ def _canon(v):
 
 
 def run_case(spark, name: str) -> dict:
-    from . import partiql
-    from .adapters.elastic import elastic_search
+    from sneller_spark import partiql
+    from sneller_spark.adapters.elastic import elastic_search
 
     raw = json.load(open(os.path.join(REF_DIR, f"{name}.json")))
     recorded = open(os.path.join(REF_DIR, f"{name}.json.sql")).read()

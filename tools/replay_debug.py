@@ -4,13 +4,15 @@ Usage: python tools/replay_debug.py <case-substring> [n_rows]
 """
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sneller_spark import replay
-from sneller_spark.session import get_spark
-from sneller_spark.sql_registry import register_sql_functions
+from sneller_spark.partiql import translate  # noqa: E402
+from sneller_spark.session import get_spark  # noqa: E402
+from sneller_spark.sql_registry import register_sql_functions  # noqa: E402
+from tools.replay import replay  # noqa: E402
 
 
 def main():
@@ -29,7 +31,7 @@ def main():
         print("--- original SQL ---")
         print(query)
         print("--- translated ---")
-        print(replay.translate(query))
+        print(translate(query))
         rec = replay.run_case(spark, path, keep_rows=True)
         print("status:", rec["status"], rec.get("detail", "")[:200])
         got = rec.get("got_rows") or []

@@ -16,9 +16,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sneller_spark import replay
 from sneller_spark.session import get_spark
 from sneller_spark.sql_registry import register_sql_functions
+from tools.replay import replay
 
 
 def main() -> None:
