@@ -11,15 +11,24 @@ of all rows) is spread over ``salt_buckets`` reducers in phase one and
 only the tiny partial results collide on the hot key in phase two.
 Counts and sums are reassociated exactly (sum of partial counts/sums),
 so salting never changes results — mirroring reduceAggregate
-(/root/reference/plan/pir/mapreduce.go:252-300).
+(/root/reference/plan/pir/mapreduce.go:252-300).  ``merge_partials``
+is the same reduce step on the driver, over the per-unit partials the
+ingest kernel returns (pipeline/route.py ``write_unit``).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 AGG_KEYS = ["sink_id", "source", "level"]
+# one row per AGG_KEYS group: the ingest kernel's partials, the
+# manifests' partials and the final aggregates table all have it
+PARTIALS_SCHEMA = pa.schema([
+    ("sink_id", pa.string()), ("source", pa.string()), ("level", pa.string()),
+    ("n_rows", pa.int64()), ("sum_n_tok", pa.int64()),
+])
 
 
 def aggregate_per_sink(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -55,3 +64,16 @@ def aggregate_per_sink_salted(
         F.sum("_pn").alias("n_rows"),
         F.sum("_ps").alias("sum_n_tok"),
     )
+
+
+def merge_partials(partials) -> list[list]:
+    """Sum (sink_id, source, level, n_rows, sum_n_tok) partial rows into
+    one row per key, sorted.  Exact integer sums; a key's sum_n_tok is
+    null only when every partial's is, as Spark's ``sum`` over nulls."""
+    acc: dict[tuple, list] = {}
+    for sink, source, level, n, s in partials:
+        cur = acc.setdefault((sink, source, level), [0, None])
+        cur[0] += n
+        if s is not None:
+            cur[1] = s if cur[1] is None else cur[1] + s
+    return sorted(([*k, *v] for k, v in acc.items()), key=repr)

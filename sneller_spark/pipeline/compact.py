@@ -124,6 +124,7 @@ def compact_routed(
     size-targeted pack generation.  Returns a stats dict; a no-op when
     fewer than two absorbable directories exist."""
     from .lineage import LineageLog
+    from .route import write_routed
     from .runner import _written_file_rows
 
     routed = os.path.join(out_dir, ROUTED_SUBDIR)
@@ -185,7 +186,7 @@ def compact_routed(
     absorb_dirs = [p for _u, p, _s in candidates]
     total_bytes = sum(s for _u, _p, s in candidates)
 
-    # file sizing must be PER SINK: partitionBy splits every shuffle
+    # file sizing must be PER SINK: the writer splits every shuffle
     # partition by sink, so a single global file budget would emit up
     # to budget x n_sinks under-sized files.  Salt each sink by its
     # own ceil(bytes/target) so distinct (sink, salt) combos — and
@@ -217,7 +218,7 @@ def compact_routed(
         .drop("unit")  # the pack dir name supplies the unit column
         .repartition(int(n_files), F.col("sink_id"), salt)
     )
-    df.write.mode("overwrite").partitionBy("sink_id").parquet(staging)
+    write_routed(df, staging)
 
     # verify from footers only: staged rows == absorbed rows
     staged_per_sink, _ = _written_file_rows(staging)

@@ -27,14 +27,27 @@ class BroadcastGuardError(ValueError):
     """Lookup table exceeds the broadcast cardinality guard."""
 
 
-def assert_broadcastable(lookup: DataFrame, max_rows: int = MAX_BROADCAST_ROWS) -> int:
-    n = lookup.limit(max_rows + 1).count()
+def _refuse_over(n: int, max_rows: int) -> None:
     if n > max_rows:
         raise BroadcastGuardError(
             f"lookup table has >{max_rows} rows; refusing to broadcast "
             "(mirrors /root/reference/doc/sneller-SQL.md:249-250)"
         )
+
+
+def assert_broadcastable(lookup: DataFrame, max_rows: int = MAX_BROADCAST_ROWS) -> int:
+    n = lookup.limit(max_rows + 1).count()
+    _refuse_over(n, max_rows)
     return n
+
+
+def collect_broadcastable(lookup: DataFrame, max_rows: int = MAX_BROADCAST_ROWS) -> list:
+    """``assert_broadcastable`` and the fetch in one job: the rows of a
+    table the caller needs on the driver, refused the same way past
+    ``max_rows``."""
+    rows = lookup.limit(max_rows + 1).collect()
+    _refuse_over(len(rows), max_rows)
+    return rows
 
 
 def enrich_stage(

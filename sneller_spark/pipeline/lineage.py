@@ -51,6 +51,10 @@ class UnitManifest:
     input_identity: list = field(default_factory=list)
     committed_at: float = field(default_factory=time.time)
     extra: dict[str, Any] = field(default_factory=dict)
+    # [sink_id, source, level, n_rows, sum_n_tok] per group of the
+    # unit's routed rows (aggregate.merge_partials); the final
+    # aggregate is their sum over committed units
+    partials: list = field(default_factory=list)
 
 
 def file_identity(paths: list[str]) -> list:

@@ -1,12 +1,15 @@
 """Parse stage — extract the pattern-bank fields (level, code, ip,
 lat_ms) from token-id sequences, fully Arrow-vectorized.
 
-``parse_stage_dict`` is the one production kernel.  Every pattern in
-``vocab.PATTERN_BANK`` matches inside a single token, so the bank runs
-ONCE over the vocabulary (RE2 via ``pc.extract_regex``) and the
-per-batch work is an integer gather over token ids — the Spark analog
-of Sneller's SIMD string kernels, which compile LIKE/regex into
+``extract_fields_dict`` is the one production parse kernel.  Every
+pattern in ``vocab.PATTERN_BANK`` matches inside a single token, so the
+bank runs ONCE over the vocabulary (RE2 via ``pc.extract_regex``) and
+the per-batch work is an integer gather over token ids — the Spark
+analog of Sneller's SIMD string kernels, which compile LIKE/regex into
 bytecode run over a whole batch (reference regexp2/Regexp2.go:14-60).
+The pipeline runs it fused with routing and the sink write in one
+``mapInArrow`` pass (pipeline/route.py); ``parse_stage_dict`` runs it
+as a stage of its own.
 
 Boundary design (measured, see BENCH/BASELINE.md): the JVM<->Python
 boundary dominates parse cost, and the expensive part is not the Arrow
@@ -38,6 +41,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..vocab import PATTERN_BANK, build_vocab
 
@@ -50,7 +54,14 @@ _ARROW_PATTERNS: dict[str, tuple[str, str]] = {
 }
 assert set(_ARROW_PATTERNS) == set(PATTERN_BANK)
 
-PARSED_FIELDS = ["level", "code", "ip", "lat_ms"]
+# the extracted columns, in output order, as every parse kernel emits them
+PARSED_SCHEMA = T.StructType([
+    T.StructField("level", T.StringType()),
+    T.StructField("code", T.IntegerType()),
+    T.StructField("ip", T.StringType()),
+    T.StructField("lat_ms", T.IntegerType()),
+])
+PARSED_FIELDS = PARSED_SCHEMA.names
 
 _vocab_pa: pa.Array | None = None
 
@@ -290,18 +301,11 @@ def parse_stage_dict(
     df: DataFrame, passthrough: list[str] | None = None
 ) -> DataFrame:
     """mapInArrow parse using the dictionary-accelerated kernel."""
-    from pyspark.sql import types as T
-
     in_cols = list(df.columns) if passthrough is None else list(passthrough)
     needed = list(dict.fromkeys(in_cols + ["tokens"]))
     projected = df.select(*needed)
     in_schema = {f.name: f for f in projected.schema.fields}
-    fields = [in_schema[c] for c in in_cols] + [
-        T.StructField("level", T.StringType()),
-        T.StructField("code", T.IntegerType()),
-        T.StructField("ip", T.StringType()),
-        T.StructField("lat_ms", T.IntegerType()),
-    ]
+    fields = [in_schema[c] for c in in_cols] + PARSED_SCHEMA.fields
     out_schema = T.StructType(fields)
     out_names = [f.name for f in fields]
 
@@ -310,10 +314,7 @@ def parse_stage_dict(
         for b in batches:
             if b.num_rows == 0:
                 continue
-            tokens = b.column("tokens")
-            if isinstance(tokens, pa.ChunkedArray):
-                tokens = tokens.combine_chunks()
-            extracted = extract_fields_dict(tokens)
+            extracted = extract_fields_dict(b.column("tokens"))
             cols = [b.column(c) for c in in_cols] + [extracted[n] for n in PARSED_FIELDS]
             yield pa.RecordBatch.from_arrays(cols, names=out_names)
 

@@ -5,9 +5,16 @@ The unit of work is one input parquet file (the Spark analog of the
 reference's block-granular work assignment,
 /root/reference/plan/unionmap.go:208-341, and of blockfmt's
 ingest-once FileTree dedup, /root/reference/db/sync.go:366-430).
-Committed units are never reprocessed; a killed run resumes where the
-commit log left off, and the final aggregates — computed from the
-routed output table, not from transient state — come out identical to
+Each unit is one Spark job with one Python pass: read the file, run
+the broadcast enrich join, then one ``mapInArrow`` kernel parses,
+routes and writes each sink's rows with pyarrow and returns only
+per-(sink_id, source, level) partial counts and token sums
+(pipeline/route.py ``write_unit``).  The unit's manifest stores those
+partials.  Committed units are never reprocessed; a killed run resumes
+where the commit log left off.  The final aggregates are the sum of
+the committed manifests' partials — the reference's map-side partial
+plus reduce-side merge (/root/reference/plan/pir/mapreduce.go:46-400)
+— so the final step reads no routed data, and comes out identical to
 a single uninterrupted run.
 
 A unit file is one parquet row group, so one Spark task; units
@@ -24,31 +31,34 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..lookups import lookup_source_df, route_rules_df
-from .aggregate import aggregate_per_sink_salted
-from .enrich import assert_broadcastable, enrich_join
+from .aggregate import PARTIALS_SCHEMA, merge_partials
+from .enrich import assert_broadcastable
 from .lineage import LineageLog, UnitManifest, file_identity
-from .parse import parse_stage_dict
-from .route import route_join, write_routed
+from .route import Routes, collect_routes, route_rows, write_unit
 
 ROUTED_SUBDIR = "routed"
 AGG_SUBDIR = "aggregates"
 SKETCH_SUBDIR = "sketches"
 
-# Output-layout version: bumped whenever the unit-id scheme changes.
-# The final aggregate reads the WHOLE routed dir and total_stats() sums
-# every manifest, so unit=* state written under an older id scheme
-# would silently double-count every row once the same inputs re-enter
-# under new ids.  Resuming an out_dir stamped with a different (or
-# missing) version is refused instead.
-LAYOUT_VERSION = "unit-ids-v3-realpath"
+# Output-layout version: bumped whenever the unit-id scheme or the
+# manifest contents change.  read_routed reads the WHOLE routed dir and
+# total_stats() sums every manifest, so unit=* state written under an
+# older id scheme would silently double-count every row once the same
+# inputs re-enter under new ids; and the final aggregate sums every
+# manifest's partials, which manifests written before v4 lack.
+# Resuming an out_dir stamped with a different (or missing) version is
+# refused instead.
+LAYOUT_VERSION = "unit-partials-v4"
 
 
 def _check_layout_version(out_dir: str, routed_dir: str, log) -> None:
@@ -85,42 +95,32 @@ def transform(
 ) -> DataFrame:
     """The pure transformation: input rows -> routed, enriched rows.
 
-    Parses with ``parse_stage_dict``, which evaluates the pattern bank
-    once over the vocabulary and extracts by sparse integer gather,
-    then runs the broadcast enrich and route joins.
+    Runs the broadcast enrich join, then the route kernel the ingest
+    path writes through (pipeline/route.py ``route_rows``): it parses
+    with ``parse.extract_fields_dict``, which evaluates the pattern bank
+    once over the vocabulary and extracts by sparse integer gather, and
+    looks up each row's sink in the routing rules.
 
-    ``passthrough`` limits which input columns survive the parse kernel
+    ``passthrough`` limits which input columns survive the kernel
     (explicit column pruning through the Arrow boundary): routing sinks
     need everything (default); an aggregation-only consumer should pass
     ["doc_id", "source", "n_tok"] so the tokens column is never echoed
     back out of the kernel."""
-    lookup, rules = _broadcast_tables(spark, lookup, rules)
-    return _route(df, lookup, rules, passthrough)
+    lookup, routes = broadcast_tables(spark, lookup, rules)
+    return route_rows(df, lookup, routes, passthrough)
 
 
-def _broadcast_tables(
+def broadcast_tables(
     spark: SparkSession,
     lookup: DataFrame | None = None,
     rules: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The enrich lookup and routing rules (built-in tables unless
-    given), each passed through the broadcast guard."""
+) -> tuple[DataFrame, Routes]:
+    """The enrich lookup, guarded for broadcast, and the routing rules,
+    fetched under the same guard (built-in tables unless given)."""
     lookup = lookup if lookup is not None else lookup_source_df(spark)
     rules = rules if rules is not None else route_rules_df(spark)
     assert_broadcastable(lookup)
-    assert_broadcastable(rules)
-    return lookup, rules
-
-
-def _route(
-    df: DataFrame,
-    lookup: DataFrame,
-    rules: DataFrame,
-    passthrough: list[str] | None = None,
-) -> DataFrame:
-    """``transform`` over tables ``_broadcast_tables`` already guarded."""
-    parsed = parse_stage_dict(df, passthrough=passthrough)
-    return route_join(enrich_join(parsed, lookup), rules)
+    return lookup, collect_routes(rules)
 
 
 def unit_id_for(path: str) -> str:
@@ -200,13 +200,19 @@ def _sketch_params_marker(sketch_dir: str, depth: int, width: int, seed: int) ->
 
 
 def _write_unit_sketch(
-    col_df: DataFrame, sketch_col: str, unit_sketch_dir: str,
+    spark: SparkSession, unit_dir: str, sketch_col: str, unit_sketch_dir: str,
     sketch_params: tuple[int, int, int],
 ) -> None:
-    """Build and durably write one unit's fixed-size CM summary;
-    overwrite keeps re-runs idempotent."""
+    """Build one unit's fixed-size CM summary from a column-pruned read
+    of its routed output and write it durably; overwrite keeps re-runs
+    idempotent.  A unit that routed no rows has no files to read and
+    gets an empty summary."""
     from ..operators.sketch import cm_sketch
 
+    if _written_file_rows(unit_dir)[1]:
+        col_df = spark.read.parquet(unit_dir).select(sketch_col)
+    else:
+        col_df = spark.range(0).select(F.lit(None).cast("string").alias(sketch_col))
     depth, width, seed = sketch_params
     sk = cm_sketch(col_df, sketch_col, depth=depth, width=width, seed=seed)
     sk.df.write.mode("overwrite").parquet(unit_sketch_dir)
@@ -267,7 +273,7 @@ def _run_unit(
     unit_id: str,
     files: list[str],
     lookup: DataFrame,
-    rules: DataFrame,
+    routes: Routes,
     routed_dir: str,
     sketch_col: str | None,
     sketch_dir: str,
@@ -277,40 +283,25 @@ def _run_unit(
     ``sketch_col`` is set); return its manifest for the caller to
     commit.  Runs on a ``run_pipeline`` pool thread."""
     t0 = time.monotonic()
-    # rows_in via observe(): collected during the write pass below,
-    # so the unit is read exactly ONCE (round-1 version re-scanned
-    # the input for .count() and the output for per-sink counts)
+    # rows_in via observe(): collected during the write job below,
+    # so the unit is read exactly ONCE
     obs = Observation(f"in-{unit_id}")
     df = spark.read.parquet(*files).observe(obs, F.count(F.lit(1)).alias("rows_in"))
-    routed = _route(df, lookup, rules)
-
-    if sketch_col is not None:
-        # the write below materializes the cache, so the sketch pass
-        # reads cached rows instead of re-reading the written unit
-        # (or re-running the parse kernel); one unit's output is
-        # bounded by the input-file unit size, and spills to disk
-        from pyspark import StorageLevel
-
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
 
     unit_dir = os.path.join(routed_dir, f"unit={unit_id}")
-    try:
-        # idempotent overwrite of THIS unit's directory only
-        write_routed(routed, unit_dir)
-
-        if sketch_col is not None:
-            # sketch BEFORE the commit: a committed unit therefore
-            # always has a durable sketch, and the overwrite keeps a
-            # re-processed unit idempotent
-            _write_unit_sketch(
-                routed.select(sketch_col), sketch_col,
-                os.path.join(sketch_dir, f"unit={unit_id}"), sketch_params,
-            )
-    finally:
-        if sketch_col is not None:
-            # release even on a failed write: a caller that catches
-            # and keeps the session must not pin a unit's rows
-            routed.unpersist()
+    # a reprocessed unit (killed mid-write, or its input changed)
+    # starts from an empty directory: task files are named by
+    # partition id, so nothing of an earlier attempt can survive
+    shutil.rmtree(unit_dir, ignore_errors=True)
+    partials = write_unit(df, lookup, routes, unit_dir)
+    if sketch_col is not None:
+        # sketch BEFORE the commit: a committed unit therefore always
+        # has a durable sketch, and the overwrite keeps a re-processed
+        # unit idempotent
+        _write_unit_sketch(
+            spark, unit_dir, sketch_col,
+            os.path.join(sketch_dir, f"unit={unit_id}"), sketch_params,
+        )
 
     # lineage + metrics from parquet footers of the files just
     # written (counts exactly what was committed, zero extra scans)
@@ -325,6 +316,7 @@ def _run_unit(
         per_sink_rows=per_sink,
         per_partition_rows=per_file,
         wall_ms=(time.monotonic() - t0) * 1000.0,
+        partials=merge_partials(partials),
     )
 
 
@@ -419,14 +411,11 @@ def run_pipeline(
                     f"committed unit {uid} has no routed output and no "
                     "compaction record — the routed table was modified "
                     "out-of-band; cannot backfill its sketch")
-            _write_unit_sketch(
-                spark.read.parquet(unit_dir).select(sketch_col),
-                sketch_col, sdir, sketch_params,
-            )
+            _write_unit_sketch(spark, unit_dir, sketch_col, sdir, sketch_params)
 
     if todo:
         # built and guarded once per run; every unit broadcasts these
-        lookup, rules = _broadcast_tables(spark)
+        lookup, routes = broadcast_tables(spark)
         pool = ThreadPoolExecutor(
             max_workers=min(len(todo), spark.sparkContext.defaultParallelism),
             thread_name_prefix="sneller-unit",
@@ -440,7 +429,7 @@ def run_pipeline(
                 # query runs, so units sharing one copy would cross ids
                 pool.submit(
                     inheritable_thread_target(spark)(_run_unit),
-                    spark, unit_id, files, lookup, rules, routed_dir,
+                    spark, unit_id, files, lookup, routes, routed_dir,
                     sketch_col, sketch_dir, sketch_params,
                 )
                 for unit_id, files in todo
@@ -475,12 +464,29 @@ def run_pipeline(
     # skips the rewrite: the committed units are unchanged, so the
     # existing aggregate is still the derived state.
     stats = log.total_stats()
-    agg_done = os.path.exists(os.path.join(out_dir, AGG_SUBDIR, "_SUCCESS"))
-    if log.committed_units() and (todo or not agg_done):
-        agg = aggregate_per_sink_salted(read_routed(spark, out_dir))
-        agg.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, AGG_SUBDIR))
+    agg_dir = os.path.join(out_dir, AGG_SUBDIR)
+    if log.committed_units() and (todo or not os.path.exists(os.path.join(agg_dir, "_SUCCESS"))):
+        _write_aggregates(log, agg_dir)
     stats["units_processed_this_run"] = len(todo)
     return stats
+
+
+def _write_aggregates(log: LineageLog, agg_dir: str) -> None:
+    """Sum the committed manifests' partials and write them as one
+    parquet file behind a ``_SUCCESS`` marker, as Spark's writer did.
+    Compaction moves rows but never changes them, so the manifests of
+    absorbed units stay valid; no Spark job runs and no routed data is
+    read."""
+    import pyarrow.parquet as pq
+
+    rows = merge_partials(
+        p for uid in sorted(log.committed_units()) for p in log.read_manifest(uid).partials)
+    shutil.rmtree(agg_dir, ignore_errors=True)
+    os.makedirs(agg_dir)
+    table = pa.Table.from_pylist(
+        [dict(zip(PARTIALS_SCHEMA.names, r)) for r in rows], schema=PARTIALS_SCHEMA)
+    pq.write_table(table, os.path.join(agg_dir, "part-00000.parquet"))
+    open(os.path.join(agg_dir, "_SUCCESS"), "w").close()
 
 
 def read_aggregates(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -1859,10 +1859,12 @@ def runner_sketch_merged_hitters(spark, sf_dir):
     exactly.  Idempotent across invocations: committed units are
     skipped on resume (input-identity checked), sketches overwrite."""
     from .operators.sketch import cm_estimate
-    from .pipeline.runner import read_merged_sketch, read_routed, run_pipeline
+    from .pipeline.runner import LAYOUT_VERSION, read_merged_sketch, read_routed, run_pipeline
 
     d = _ensure_flagship_inputs()
-    out = os.path.join(d, "runner_out_sketch")
+    # layout-keyed: run_pipeline refuses to resume state written under
+    # another LAYOUT_VERSION, and this dir outlives the process
+    out = os.path.join(d, f"runner_out_sketch_{LAYOUT_VERSION}")
     # the out_dir is shared fixture state: two concurrent invocations
     # (pytest + a driver/bench subprocess) would race the same unit
     # dirs and commit log — serialize the build with an exclusive
@@ -1932,12 +1934,13 @@ def runner_compacted_per_sink(spark, sf_dir):
     exactly.  Idempotent: a re-run resumes to a no-op and a second
     compaction finds a single pack (nothing to fold)."""
     from .pipeline.compact import compact_routed
-    from .pipeline.runner import read_routed, run_pipeline
+    from .pipeline.runner import LAYOUT_VERSION, read_routed, run_pipeline
 
     d = _ensure_flagship_inputs()
     # fixture-version-keyed out dir: a regenerated input must start a
-    # fresh ingest, never re-feed units already absorbed into a pack
-    out = os.path.join(d, f"runner_out_compact_{_fixture_version()}")
+    # fresh ingest, never re-feed units already absorbed into a pack;
+    # layout-keyed, as run_pipeline refuses another layout's state
+    out = os.path.join(d, f"runner_out_compact_{_fixture_version()}_{LAYOUT_VERSION}")
     import fcntl
 
     with open(os.path.join(d, ".runner_out_compact.lock"), "w") as lk:

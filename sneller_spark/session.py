@@ -13,6 +13,7 @@ gives us the same thing when shuffle partitions ~ cores.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -135,11 +136,20 @@ def ship_package(spark: SparkSession) -> None:
     key = id(sc)
     if key in _shipped:
         return
+    import atexit
     import tempfile
 
     zpath = os.path.join(tempfile.gettempdir(), f"sneller_spark_pyfiles_{os.getpid()}.zip")
     sc.addPyFile(write_package_zip(zpath))
     _shipped.add(key)
+    # Spark copies the zip into its own file server at addPyFile; this
+    # copy only has to outlive the process's own readers
+    atexit.register(_remove_quietly, zpath)
+
+
+def _remove_quietly(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def stop_spark() -> None:

@@ -6,20 +6,23 @@ batch ingest with an index that dedups inputs
 pipeline/runner.py (unit manifests + resume).  This module is the
 capability upside: the SAME transform (parse -> enrich -> route) run as
 a Structured Streaming job over a file source, with
-``foreachBatch`` writing the partitioned fan-out exactly-once per
-micro-batch (checkpointed), which is how the pipeline would tail a
-landing bucket on a real cluster.
+``foreachBatch`` writing the per-sink fan-out exactly-once per
+micro-batch (checkpointed) through the ingest unit kernel
+(pipeline/route.py ``write_unit``), which is how the pipeline would
+tail a landing bucket on a real cluster.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import TOKENS_SCHEMA
-from ..pipeline.runner import transform
+from ..pipeline.route import write_unit
+from ..pipeline.runner import broadcast_tables, transform
 
 
 def stream_pipeline(
@@ -29,11 +32,13 @@ def stream_pipeline(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int = 4,
 ):
-    """readStream over a directory of tokens parquet -> transform ->
-    partitioned fan-out sink via foreachBatch.  Returns the
-    StreamingQuery (caller drives with processAllAvailable/stop)."""
+    """readStream over a directory of tokens parquet -> per-sink
+    fan-out via foreachBatch, one ``epoch=<id>`` directory per
+    micro-batch.  Returns the StreamingQuery (caller drives with
+    processAllAvailable/stop)."""
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
     routed_dir = os.path.join(out_dir, "routed_stream")
+    lookup, routes = broadcast_tables(spark)
 
     stream = (
         spark.readStream.schema(TOKENS_SCHEMA)
@@ -42,12 +47,12 @@ def stream_pipeline(
     )
 
     def sink(batch_df, epoch_id: int) -> None:
-        routed = transform(spark, batch_df)
-        # epoch-scoped directory => exactly-once under retries (the
-        # same epoch overwrites itself, never double-appends)
-        routed.write.mode("overwrite").partitionBy("sink_id").parquet(
-            os.path.join(routed_dir, f"epoch={epoch_id}")
-        )
+        # epoch-scoped directory => exactly-once under retries (a
+        # replayed epoch starts from an empty directory, never
+        # double-appends)
+        epoch_dir = os.path.join(routed_dir, f"epoch={epoch_id}")
+        shutil.rmtree(epoch_dir, ignore_errors=True)
+        write_unit(batch_df, lookup, routes, epoch_dir)
 
     return (
         stream.writeStream.outputMode("append")

@@ -24,7 +24,7 @@ from sneller_spark.datagen import SOURCES, TOKENS_SCHEMA
 from sneller_spark.lookups import lookup_source_df, route_rules_df
 from sneller_spark.oracle import run_oracle
 from sneller_spark.pipeline.enrich import enrich_join
-from sneller_spark.pipeline.route import route_join
+from sneller_spark.pipeline.route import route_stage
 from sneller_spark.pipeline.runner import transform
 from sneller_spark.vocab import MOTIF_BASE, N_MOTIFS, VOCAB_SIZE
 
@@ -87,12 +87,12 @@ def _canon_agg(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def _transform(spark, df, kernel: str):
-    """``transform`` with the production kernel, or the same enrich and
-    route joins over the regex reference kernel."""
+    """``transform`` with the production kernel, or the regex reference
+    parse followed by the Catalyst enrich and route joins."""
     if kernel == "dict":
         return transform(spark, df)
     enriched = enrich_join(parse_stage(df), lookup_source_df(spark))
-    return route_join(enriched, route_rules_df(spark))
+    return route_stage(enriched, route_rules_df(spark))
 
 
 @pytest.mark.parametrize("seed", range(N_CASES))

@@ -415,26 +415,33 @@ def test_unit_jobs_inherit_caller_job_group(spark, input_dir, tmp_path):
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
     assert stats["units_processed_this_run"] == FILES
     assert set(tracker.getJobIdsForGroup(None)) - groupless_before == set()
-    # at least one write job per unit, plus the final aggregate
+    # at least one write job per unit, plus the broadcast guard's
     assert len(tracker.getJobIdsForGroup("runner-group")) > FILES
 
 
 def test_broadcast_guards_run_once_per_call(spark, input_dir, tmp_path, monkeypatch):
     """The lookup and rules tables are guarded once per run_pipeline
     call, not once per unit, and an oversized table is still refused
-    before any unit commits."""
-    from sneller_spark.pipeline import runner
+    before any unit commits.  The lookup goes through
+    ``assert_broadcastable``; the rules, which the route kernel needs
+    on the driver, are fetched by ``collect_broadcastable`` under the
+    same guard, so the hook counts both."""
+    from sneller_spark.pipeline import route, runner
     from sneller_spark.pipeline.enrich import (
         MAX_BROADCAST_ROWS, BroadcastGuardError, assert_broadcastable,
+        collect_broadcastable,
     )
 
     calls = []
 
-    def counting_guard(df, *args, **kwargs):
-        calls.append(df)
-        return assert_broadcastable(df, *args, **kwargs)
+    def counting(guard):
+        def counted(df, *args, **kwargs):
+            calls.append(df)
+            return guard(df, *args, **kwargs)
+        return counted
 
-    monkeypatch.setattr(runner, "assert_broadcastable", counting_guard)
+    monkeypatch.setattr(runner, "assert_broadcastable", counting(assert_broadcastable))
+    monkeypatch.setattr(route, "collect_broadcastable", counting(collect_broadcastable))
     run_pipeline(spark, input_dir, str(tmp_path / "once"))
     assert len(calls) == 2
 
