@@ -13,7 +13,7 @@ Counts and sums are reassociated exactly (sum of partial counts/sums),
 so salting never changes results — mirroring reduceAggregate
 (/root/reference/plan/pir/mapreduce.go:252-300).  ``merge_partials``
 is the same reduce step on the driver, over the per-unit partials the
-ingest kernel returns (pipeline/route.py ``write_unit``).
+ingest kernel returns (pipeline/route.py ``write_unit_file``).
 """
 
 from __future__ import annotations

@@ -82,12 +82,8 @@ class LineageLog:
 
     def is_committed(self, unit_id: str, inputs: list[str] | None = None) -> bool:
         """A unit only counts as committed if its manifest exists AND
-        (when `inputs` is given) the manifest's recorded input identity
-        — (basename, size, mtime_ns) per file — matches the unit's
-        current files: an input rewritten in place with the same name
-        must be reprocessed (the FileTree-identity check,
-        /root/reference/db/sync.go:366-430).  Manifests written before
-        input_identity existed fall back to basename-only comparison."""
+        (when `inputs` is given) ``inputs_match`` the unit's current
+        files."""
         path = os.path.join(self.manifest_dir, f"{unit_id}.json")
         if not os.path.exists(path):
             return False
@@ -97,15 +93,19 @@ class LineageLog:
             m = self.read_manifest(unit_id)
         except (OSError, ValueError, TypeError):
             return False
-        if m.input_identity:
+        return inputs_match(m, inputs)
+
+    def read_manifests(self) -> dict[str, UnitManifest | None]:
+        """Every committed unit's manifest, each file parsed once; None
+        for one that does not parse, whose unit then counts as
+        uncommitted."""
+        out: dict[str, UnitManifest | None] = {}
+        for uid in sorted(self.committed_units()):
             try:
-                current = file_identity(inputs)
-            except OSError:
-                return False
-            return [list(e) for e in m.input_identity] == current
-        return sorted(os.path.basename(f) for f in m.inputs) == sorted(
-            os.path.basename(f) for f in inputs
-        )
+                out[uid] = self.read_manifest(uid)
+            except (OSError, ValueError, TypeError):
+                out[uid] = None
+        return out
 
     def commit(self, manifest: UnitManifest) -> None:
         """Atomically publish the manifest, then append the commit log."""
@@ -124,17 +124,37 @@ class LineageLog:
         with open(os.path.join(self.manifest_dir, f"{unit_id}.json")) as f:
             return UnitManifest(**json.load(f))
 
-    def total_stats(self) -> dict[str, int]:
-        """ExecStats analog (/root/reference/plan/stats.go:28-60)."""
-        rows_in = rows_routed = input_bytes = 0
-        for uid in self.committed_units():
-            m = self.read_manifest(uid)
-            rows_in += m.rows_in
-            rows_routed += m.rows_routed
-            input_bytes += m.input_bytes
-        return {
-            "units": len(self.committed_units()),
-            "rows_in": rows_in,
-            "rows_routed": rows_routed,
-            "input_bytes": input_bytes,
-        }
+
+def inputs_match(m: UnitManifest | None, inputs: list[str]) -> bool:
+    """Whether manifest ``m`` records the unit's current ``inputs``: its
+    input identity — (basename, size, mtime_ns) per file — must match,
+    so an input rewritten in place with the same name is reprocessed
+    (the FileTree-identity check, reference db/sync.go:366-430).
+    Manifests written before input_identity existed fall back to
+    basename-only comparison."""
+    if m is None:
+        return False
+    if m.input_identity:
+        try:
+            current = file_identity(inputs)
+        except OSError:
+            return False
+        return [list(e) for e in m.input_identity] == current
+    return sorted(os.path.basename(f) for f in m.inputs) == sorted(
+        os.path.basename(f) for f in inputs
+    )
+
+
+def total_stats(manifests: dict[str, UnitManifest | None]) -> dict[str, int]:
+    """ExecStats analog (reference plan/stats.go:28-60) over the
+    committed units' manifests."""
+    unreadable = sorted(uid for uid, m in manifests.items() if m is None)
+    if unreadable:
+        raise ValueError(f"manifests of committed units {unreadable} do not parse")
+    ms = manifests.values()
+    return {
+        "units": len(manifests),
+        "rows_in": sum(m.rows_in for m in ms),
+        "rows_routed": sum(m.rows_routed for m in ms),
+        "input_bytes": sum(m.input_bytes for m in ms),
+    }

@@ -7,9 +7,9 @@ bank runs ONCE over the vocabulary (RE2 via ``pc.extract_regex``) and
 the per-batch work is an integer gather over token ids — the Spark
 analog of Sneller's SIMD string kernels, which compile LIKE/regex into
 bytecode run over a whole batch (reference regexp2/Regexp2.go:14-60).
-The pipeline runs it fused with routing and the sink write in one
-``mapInArrow`` pass (pipeline/route.py); ``parse_stage_dict`` runs it
-as a stage of its own.
+The pipeline runs it fused with enrichment, routing and the sink write
+in one ``mapInArrow`` pass (pipeline/route.py); ``parse_stage_dict``
+runs it as a stage of its own.
 
 Boundary design (measured, see BENCH/BASELINE.md): the JVM<->Python
 boundary dominates parse cost, and the expensive part is not the Arrow

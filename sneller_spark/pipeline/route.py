@@ -3,16 +3,18 @@
 Spark analog of Sneller's TeeWriter + OutputPart
 (/root/reference/vm/tee.go:27-80, /root/reference/plan/output.go:142-182):
 the reference writes every sink from inside its vectorized pass.  Here
-one ``mapInArrow`` kernel takes each enriched batch, parses it
+one ``mapInArrow`` kernel takes each input batch, enriches it in Arrow
+from the lookup table (``enrich.enrich_columns``), parses it
 (``parse.extract_fields_dict``), looks up each row's sink in the
 routing rules, and then either returns the routed rows (``route_rows``,
 what ``runner.transform`` runs) or writes each sink's rows with
 ``pyarrow.parquet`` and returns only per-(sink_id, source, level)
-partial counts and token sums (``write_unit``, one pipeline unit).  The
-tokens column crosses into Python once and never comes back to the JVM:
-Spark's parquet writer spent about 3 CPU-s per 100k rows encoding it,
-pyarrow's about a fifth of that.  The enrich join stays in Catalyst
-ahead of the kernel, since its key ``source`` is an input column.
+partial counts and token sums.  ``write_unit`` does the latter over a
+DataFrame's batches (the streaming epoch sink); ``write_unit_file``,
+one pipeline unit, reads the unit's parquet file inside the kernel,
+one task per row group, so the rows never cross the JVM at all: the
+JVM's decode of the tokens column and its row-by-row conversion to
+Arrow were most of a unit's time.
 
 Output layout is the hive layout of Spark's ``partitionBy("sink_id")``:
 ``<dir>/sink_id=<s>/``, one file per task per sink.  Each file is
@@ -40,14 +42,14 @@ from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema, to_arrow_type
 
 from ..lookups import CATCH_ALL_SINK
 from .aggregate import AGG_KEYS, PARTIALS_SCHEMA
-from .enrich import assert_broadcastable, collect_broadcastable, enrich_join
+from .enrich import Lookup, assert_broadcastable, collect_broadcastable, enrich_columns
 from .parse import PARSED_FIELDS, PARSED_SCHEMA, extract_fields_dict
 
 ROUTE_ON = ("category", "level")
@@ -101,76 +103,117 @@ def sink_ids(routes: Routes, category: pa.Array, level: pa.Array) -> pa.Array:
     return pc.fill_null(routes.sinks.take(pair), CATCH_ALL_SINK)
 
 
-def _layout(
-    df: DataFrame, lookup: DataFrame, passthrough: list[str] | None
-) -> tuple[DataFrame, list[T.StructField]]:
-    """The enriched input the kernel reads, and the routed columns it
-    emits (sink_id aside), named and ordered as the Catalyst chain of
-    parse, enrich join and route join produced them."""
-    in_cols = list(df.columns) if passthrough is None else list(passthrough)
-    enriched = enrich_join(df.select(*dict.fromkeys([*in_cols, "tokens"])), lookup)
-    fields = {f.name: f for f in [*enriched.schema.fields, *PARSED_SCHEMA.fields]}
-    added = [c for c in enriched.columns if c not in in_cols and c != "tokens"]
-    kept = [c for c in enriched.columns if c in in_cols] + PARSED_FIELDS + added
-    names = [*ROUTE_ON, *(c for c in kept if c not in ROUTE_ON)]
-    return enriched, [fields[c] for c in names]
+class _Router:
+    """The per-batch kernel: enrich one batch of input columns in Arrow,
+    parse it, and look up each row's sink.  ``fields`` are the routed
+    columns (sink_id aside), named, typed and ordered as the Catalyst
+    chain of enrich join, parse and route join produced them."""
 
+    def __init__(self, in_fields: list[T.StructField], lookup: Lookup, routes: Routes):
+        self.lookup, self.routes = lookup, routes
+        by_name = {f.name: f for f in [*in_fields, *PARSED_SCHEMA.fields, *lookup.fields]}
+        kept = [lookup.key, *(f.name for f in in_fields if f.name != lookup.key),
+                *PARSED_FIELDS, *(f.name for f in lookup.fields)]
+        self.fields = [by_name[c] for c in [*ROUTE_ON, *(c for c in kept if c not in ROUTE_ON)]]
+        self.names = [f.name for f in self.fields]
+        self.added = {f.name: pa.field(f.name, to_arrow_type(f.dataType), f.nullable)
+                      for f in [*PARSED_SCHEMA.fields, *lookup.fields]}
 
-def _parse_route(
-    batch: pa.RecordBatch, names: list[str], routes: Routes
-) -> tuple[pa.RecordBatch, pa.Array]:
-    """One enriched batch -> (its routed rows as columns ``names``, their
-    sinks).  Input columns keep the batch's own field, so a non-null
-    enriched column is written REQUIRED, as Spark's writer wrote it."""
-    cols = dict(zip(batch.schema.names, batch.columns))
-    cols.update(extract_fields_dict(cols["tokens"]))
-    sinks = sink_ids(routes, *(cols[c] for c in ROUTE_ON))
-    schema = pa.schema([
-        batch.schema.field(c) if c in batch.schema.names else pa.field(c, cols[c].type)
-        for c in names
-    ])
-    return pa.RecordBatch.from_arrays([cols[c] for c in names], schema=schema), sinks
+    def __call__(self, batch: pa.RecordBatch) -> tuple[pa.RecordBatch, pa.Array]:
+        """One input batch -> (its routed rows, their sinks).  Input
+        columns keep the batch's own field and the added ones Spark's,
+        so a defaulted lookup column is written REQUIRED, as Spark's
+        writer wrote it."""
+        cols = dict(zip(batch.schema.names, batch.columns))
+        cols.update(enrich_columns(self.lookup, cols[self.lookup.key]))
+        cols.update(extract_fields_dict(cols["tokens"]))
+        sinks = sink_ids(self.routes, *(cols[c] for c in ROUTE_ON))
+        schema = pa.schema([self.added.get(c) or batch.schema.field(c) for c in self.names])
+        return pa.RecordBatch.from_arrays([cols[c] for c in self.names], schema=schema), sinks
 
 
 def route_rows(
     df: DataFrame,
-    lookup: DataFrame,
+    lookup: Lookup,
     routes: Routes,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
-    """Enrich, then parse and route in one kernel; the routed rows."""
-    enriched, fields = _layout(df, lookup, passthrough)
-    names = [f.name for f in fields]
+    """Enrich, parse and route in one kernel; the routed rows."""
+    in_cols = list(df.columns) if passthrough is None else list(passthrough)
+    router = _Router([df.schema[c] for c in in_cols], lookup, routes)
 
     def run(batches):
         pa.set_cpu_count(1)
         for b in batches:
             if b.num_rows:
-                rows, sinks = _parse_route(b, names, routes)
+                rows, sinks = router(b)
                 yield pa.RecordBatch.from_arrays(
                     [*rows.columns, sinks], names=[*rows.schema.names, "sink_id"])
 
-    return enriched.mapInArrow(run, schema=T.StructType([*fields, SINK_FIELD]))
+    return df.select(*dict.fromkeys([*in_cols, "tokens"])).mapInArrow(
+        run, schema=T.StructType([*router.fields, SINK_FIELD]))
 
 
-def write_unit(df: DataFrame, lookup: DataFrame, routes: Routes, out_dir: str) -> list:
-    """Enrich, then parse, route and write each sink's rows under
-    ``out_dir`` in one kernel: one Spark job, one Python pass.  Returns
+def _write_batches(batches, router: _Router, out_dir: str):
+    """Route and write each input batch's rows under ``out_dir``; yield
     the partial (sink_id, source, level, n_rows, sum_n_tok) rows of the
     rows written, one per key per batch."""
-    enriched, fields = _layout(df, lookup, None)
-    names = [f.name for f in fields]
+    with _SinkFiles(out_dir) as files:
+        for b in batches:
+            if b.num_rows:
+                rows, sinks = router(b)
+                files.write(rows, sinks)
+                yield from _partials(rows, sinks).to_batches()
+
+
+def write_unit(df: DataFrame, lookup: Lookup, routes: Routes, out_dir: str) -> list:
+    """Enrich, parse, route and write each sink's rows of ``df`` under
+    ``out_dir`` in one kernel over its batches; the partials."""
+    router = _Router(df.schema.fields, lookup, routes)
 
     def run(batches):
         pa.set_cpu_count(1)
-        with _SinkFiles(out_dir) as files:
-            for b in batches:
-                if b.num_rows:
-                    rows, sinks = _parse_route(b, names, routes)
-                    files.write(rows, sinks)
-                    yield from _partials(rows, sinks).to_batches()
+        yield from _write_batches(batches, router, out_dir)
 
-    return enriched.mapInArrow(run, schema=from_arrow_schema(PARTIALS_SCHEMA)).collect()
+    return df.mapInArrow(run, schema=from_arrow_schema(PARTIALS_SCHEMA)).collect()
+
+
+def write_unit_file(
+    spark: SparkSession,
+    path: str,
+    row_groups: int,
+    in_schema: T.StructType,
+    lookup: Lookup,
+    routes: Routes,
+    out_dir: str,
+) -> list:
+    """``write_unit`` over a parquet file the kernel reads itself: one
+    task per row group, reading it with pyarrow as Spark's reader typed
+    it (``in_schema``) and in Spark's Arrow batch size.  One Spark job;
+    the partials."""
+    schema = to_arrow_schema(in_schema)
+    router = _Router(in_schema.fields, lookup, routes)
+    # zero or negative: no limit, so one batch per row group
+    batch_size = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def read(ids):
+        import pyarrow.parquet as pq
+
+        pf = pq.ParquetFile(path)
+        size = batch_size if batch_size > 0 else max(1, pf.metadata.num_rows)
+        for ib in ids:
+            for group in ib.column(0).to_pylist():
+                for b in pf.iter_batches(size, row_groups=[group], use_threads=False):
+                    yield b.cast(schema)
+
+    def run(ids):
+        pa.set_cpu_count(1)
+        yield from _write_batches(read(ids), router, out_dir)
+
+    # spark.range, not createDataFrame([path]): a mapInArrow over a
+    # local relation waited 0.55-0.9 s for its first input batch
+    return spark.range(row_groups, numPartitions=row_groups).mapInArrow(
+        run, schema=from_arrow_schema(PARTIALS_SCHEMA)).collect()
 
 
 def _partials(rows: pa.RecordBatch, sinks: pa.Array) -> pa.Table:

@@ -5,26 +5,32 @@ The unit of work is one input parquet file (the Spark analog of the
 reference's block-granular work assignment,
 /root/reference/plan/unionmap.go:208-341, and of blockfmt's
 ingest-once FileTree dedup, /root/reference/db/sync.go:366-430).
-Each unit is one Spark job with one Python pass: read the file, run
-the broadcast enrich join, then one ``mapInArrow`` kernel parses,
-routes and writes each sink's rows with pyarrow and returns only
-per-(sink_id, source, level) partial counts and token sums
-(pipeline/route.py ``write_unit``).  The unit's manifest stores those
-partials.  Committed units are never reprocessed; a killed run resumes
-where the commit log left off.  The final aggregates are the sum of
-the committed manifests' partials — the reference's map-side partial
-plus reduce-side merge (/root/reference/plan/pir/mapreduce.go:46-400)
-— so the final step reads no routed data, and comes out identical to
-a single uninterrupted run.
+Each unit is one Spark job whose Python tasks read the file
+themselves: the driver checks the file's footer against
+``TOKENS_SCHEMA``, then one ``mapInArrow`` task per row group reads
+its group with pyarrow, enriches it in Arrow from the lookup table,
+parses, routes and writes each sink's rows with pyarrow, and returns
+only per-(sink_id, source, level) partial counts and token sums
+(pipeline/route.py ``write_unit_file``).  The rows never pass through
+the JVM, and the job has no read, join or broadcast stage of Spark's.
+The unit's manifest stores the partials; its ``rows_in`` is their row
+count, since every row is routed.  Committed units are never
+reprocessed; a killed run resumes where the commit log left off.  The
+final aggregates are the sum of the committed manifests' partials —
+the reference's map-side partial plus reduce-side merge
+(reference plan/pir/mapreduce.go:46-400) — so the final step
+reads no routed data, and comes out identical to a single
+uninterrupted run.  Each call parses every committed manifest once.
 
-A unit file is one parquet row group, so one Spark task; units
-therefore run concurrently, up to ``defaultParallelism`` at a time.
-The calling thread commits each unit's manifest in completion order,
-after that unit's data is durable, so the commit protocol and its
-single writer are unchanged.  Manifest ``wall_ms`` values overlap:
-their sum exceeds the run's wall time.  If a unit fails, units already
-running finish and commit, queued ones are cancelled, and the first
-error is re-raised.
+The lookup and routing tables are fetched to the driver once per run,
+under the 10,000-row broadcast guard, and travel to every task in the
+kernel's closure.  Units run concurrently, up to
+``defaultParallelism`` at a time.  The calling thread commits each
+unit's manifest in completion order, after that unit's data is
+durable, so the commit protocol and its single writer are unchanged.
+Manifest ``wall_ms`` values overlap: their sum exceeds the run's wall
+time.  If a unit fails, units already running finish and commit,
+queued ones are cancelled, and the first error is re-raised.
 """
 
 from __future__ import annotations
@@ -36,15 +42,19 @@ import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.util import inheritable_thread_target
 
+from ..datagen import TOKENS_SCHEMA
 from ..lookups import lookup_source_df, route_rules_df
 from .aggregate import PARTIALS_SCHEMA, merge_partials
-from .enrich import assert_broadcastable
-from .lineage import LineageLog, UnitManifest, file_identity
-from .route import Routes, collect_routes, route_rows, write_unit
+from .enrich import Lookup, collect_lookup
+from .lineage import LineageLog, UnitManifest, file_identity, inputs_match, total_stats
+from .route import Routes, collect_routes, route_rows, write_unit_file
 
 ROUTED_SUBDIR = "routed"
 AGG_SUBDIR = "aggregates"
@@ -95,11 +105,13 @@ def transform(
 ) -> DataFrame:
     """The pure transformation: input rows -> routed, enriched rows.
 
-    Runs the broadcast enrich join, then the route kernel the ingest
-    path writes through (pipeline/route.py ``route_rows``): it parses
-    with ``parse.extract_fields_dict``, which evaluates the pattern bank
+    Runs the kernel the ingest path writes through (pipeline/route.py
+    ``route_rows``) over ``df``'s batches: it enriches each batch in
+    Arrow from the lookup table, parses with
+    ``parse.extract_fields_dict``, which evaluates the pattern bank
     once over the vocabulary and extracts by sparse integer gather, and
-    looks up each row's sink in the routing rules.
+    looks up each row's sink in the routing rules.  The plan is the
+    input, then one Python node: no join, no shuffle.
 
     ``passthrough`` limits which input columns survive the kernel
     (explicit column pruning through the Arrow boundary): routing sinks
@@ -114,13 +126,13 @@ def broadcast_tables(
     spark: SparkSession,
     lookup: DataFrame | None = None,
     rules: DataFrame | None = None,
-) -> tuple[DataFrame, Routes]:
-    """The enrich lookup, guarded for broadcast, and the routing rules,
-    fetched under the same guard (built-in tables unless given)."""
+) -> tuple[Lookup, Routes]:
+    """The enrich lookup and the routing rules, each fetched to the
+    driver in one guarded job (built-in tables unless given); the
+    kernel's closure carries them to every task."""
     lookup = lookup if lookup is not None else lookup_source_df(spark)
     rules = rules if rules is not None else route_rules_df(spark)
-    assert_broadcastable(lookup)
-    return lookup, collect_routes(rules)
+    return collect_lookup(lookup), collect_routes(rules)
 
 
 def unit_id_for(path: str) -> str:
@@ -153,11 +165,41 @@ def list_units(input_path: str) -> list[tuple[str, list[str]]]:
     return [(unit_id_for(f), [f]) for f in files]
 
 
+def _as_read(dt: T.DataType) -> T.DataType:
+    """``dt`` as Spark's file reader types it: every field, element and
+    map value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _as_read(f.dataType)) for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_read(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_read(dt.keyType), _as_read(dt.valueType))
+    return dt
+
+
+def _unit_input(path: str) -> tuple[int, T.StructType]:
+    """The row-group count of a unit file and the schema Spark's reader
+    gives it, from its footer.  A file that is not parquet, or whose
+    columns break ``TOKENS_SCHEMA``, raises a ValueError naming it;
+    extra columns pass through."""
+    try:
+        pf = pq.ParquetFile(path)
+        schema = _as_read(from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True))
+    except (pa.ArrowException, TypeError) as e:
+        raise ValueError(f"unit input {path!r} is not a parquet file Spark can read: {e}") from e
+    have = {f.name: f.dataType.simpleString() for f in schema.fields}
+    broken = [f"{f.name} {f.dataType.simpleString()} (file: {have.get(f.name, 'missing')})"
+              for f in T.StructType.fromDDL(TOKENS_SCHEMA).fields
+              if have.get(f.name) != f.dataType.simpleString()]
+    if broken:
+        raise ValueError(f"unit input {path!r} breaks the input contract "
+                         f"{TOKENS_SCHEMA!r}: {', '.join(broken)}")
+    return pf.num_row_groups, schema
+
+
 def _written_file_rows(unit_dir: str) -> tuple[dict[str, int], dict[str, int]]:
     """Per-sink and per-file row counts of a just-written unit, read
     from parquet FOOTERS only (no data scan, no Spark job)."""
-    import pyarrow.parquet as pq
-
     per_sink: dict[str, int] = {}
     per_file: dict[str, int] = {}
     for root, _dirs, fnames in os.walk(unit_dir):
@@ -272,28 +314,27 @@ def _run_unit(
     spark: SparkSession,
     unit_id: str,
     files: list[str],
-    lookup: DataFrame,
+    lookup: Lookup,
     routes: Routes,
     routed_dir: str,
     sketch_col: str | None,
     sketch_dir: str,
     sketch_params: tuple[int, int, int],
 ) -> UnitManifest:
-    """Read, transform and durably write one unit (plus its sketch when
-    ``sketch_col`` is set); return its manifest for the caller to
-    commit.  Runs on a ``run_pipeline`` pool thread."""
+    """Check, read, transform and durably write one unit (plus its
+    sketch when ``sketch_col`` is set); return its manifest for the
+    caller to commit.  Runs on a ``run_pipeline`` pool thread."""
     t0 = time.monotonic()
-    # rows_in via observe(): collected during the write job below,
-    # so the unit is read exactly ONCE
-    obs = Observation(f"in-{unit_id}")
-    df = spark.read.parquet(*files).observe(obs, F.count(F.lit(1)).alias("rows_in"))
+    (path,) = files  # list_units makes one unit per file
+    row_groups, in_schema = _unit_input(path)
 
     unit_dir = os.path.join(routed_dir, f"unit={unit_id}")
     # a reprocessed unit (killed mid-write, or its input changed)
     # starts from an empty directory: task files are named by
     # partition id, so nothing of an earlier attempt can survive
     shutil.rmtree(unit_dir, ignore_errors=True)
-    partials = write_unit(df, lookup, routes, unit_dir)
+    partials = merge_partials(write_unit_file(
+        spark, path, row_groups, in_schema, lookup, routes, unit_dir) if row_groups else [])
     if sketch_col is not None:
         # sketch BEFORE the commit: a committed unit therefore always
         # has a durable sketch, and the overwrite keeps a re-processed
@@ -311,12 +352,13 @@ def _run_unit(
         inputs=files,
         input_identity=file_identity(files),
         input_bytes=sum(os.path.getsize(f) for f in files),
-        rows_in=int(obs.get["rows_in"]),
+        # every row is routed, to exactly one sink
+        rows_in=sum(p[3] for p in partials),
         rows_routed=sum(per_sink.values()),
         per_sink_rows=per_sink,
         per_partition_rows=per_file,
         wall_ms=(time.monotonic() - t0) * 1000.0,
-        partials=merge_partials(partials),
+        partials=partials,
     )
 
 
@@ -346,10 +388,13 @@ def run_pipeline(
     routed_dir = os.path.join(out_dir, ROUTED_SUBDIR)
     units = list_units(input_path)
     _check_layout_version(out_dir, routed_dir, log)
+    # each committed manifest is parsed once per call; units committed
+    # below join the dict, and the stats and aggregates come from it
+    manifests = log.read_manifests()
     done_ids = {
         uid
         for uid, files in units
-        if resume and log.is_committed(uid, inputs=files)
+        if resume and inputs_match(manifests.get(uid), files)
     }
     todo = [(uid, files) for uid, files in units if uid not in done_ids]
     if todo:
@@ -391,7 +436,7 @@ def run_pipeline(
 
         absorbed_units, _packs = compaction_view(out_dir)
         todo_ids = {uid for uid, _ in todo}
-        for uid in sorted(log.committed_units() - todo_ids):
+        for uid in sorted(set(manifests) - todo_ids):
             sdir = os.path.join(sketch_dir, f"unit={uid}")
             if os.path.exists(os.path.join(sdir, "_SUCCESS")):
                 continue
@@ -414,7 +459,7 @@ def run_pipeline(
             _write_unit_sketch(spark, unit_dir, sketch_col, sdir, sketch_params)
 
     if todo:
-        # built and guarded once per run; every unit broadcasts these
+        # fetched and guarded once per run; every unit's kernel carries them
         lookup, routes = broadcast_tables(spark)
         pool = ThreadPoolExecutor(
             max_workers=min(len(todo), spark.sparkContext.defaultParallelism),
@@ -453,6 +498,7 @@ def run_pipeline(
                             f.cancel()
                     continue
                 log.commit(manifest)
+                manifests[manifest.unit_id] = manifest
         finally:
             pool.shutdown(cancel_futures=True)
         if first_error is not None:
@@ -463,24 +509,21 @@ def run_pipeline(
     # A no-op resume (nothing processed, aggregate already written)
     # skips the rewrite: the committed units are unchanged, so the
     # existing aggregate is still the derived state.
-    stats = log.total_stats()
+    stats = total_stats(manifests)
     agg_dir = os.path.join(out_dir, AGG_SUBDIR)
-    if log.committed_units() and (todo or not os.path.exists(os.path.join(agg_dir, "_SUCCESS"))):
-        _write_aggregates(log, agg_dir)
+    if manifests and (todo or not os.path.exists(os.path.join(agg_dir, "_SUCCESS"))):
+        _write_aggregates(manifests, agg_dir)
     stats["units_processed_this_run"] = len(todo)
     return stats
 
 
-def _write_aggregates(log: LineageLog, agg_dir: str) -> None:
+def _write_aggregates(manifests: dict[str, UnitManifest], agg_dir: str) -> None:
     """Sum the committed manifests' partials and write them as one
     parquet file behind a ``_SUCCESS`` marker, as Spark's writer did.
     Compaction moves rows but never changes them, so the manifests of
     absorbed units stay valid; no Spark job runs and no routed data is
     read."""
-    import pyarrow.parquet as pq
-
-    rows = merge_partials(
-        p for uid in sorted(log.committed_units()) for p in log.read_manifest(uid).partials)
+    rows = merge_partials(p for uid in sorted(manifests) for p in manifests[uid].partials)
     shutil.rmtree(agg_dir, ignore_errors=True)
     os.makedirs(agg_dir)
     table = pa.Table.from_pylist(

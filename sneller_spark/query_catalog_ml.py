@@ -120,6 +120,19 @@ def _fixture_version() -> str:
     return h.hexdigest()[:16]
 
 
+def _drop_stale_outs(out: str, prefix: str) -> None:
+    """Remove the sibling out dirs of ``out`` named ``prefix*`` but
+    keyed by another fixture or layout version: nothing reads them
+    again, and the flagship dir outlives the process.  Call it under
+    the build lock of ``prefix``."""
+    import shutil
+
+    parent, name = os.path.split(out)
+    for sibling in os.listdir(parent):
+        if sibling.startswith(prefix) and sibling != name:
+            shutil.rmtree(os.path.join(parent, sibling), ignore_errors=True)
+
+
 def _ensure_flagship_inputs() -> str:
     """Materialize the flagship's deterministic input — the tokens
     table, the vocabulary, and the lookup/rule tables — as parquet that
@@ -1874,6 +1887,7 @@ def runner_sketch_merged_hitters(spark, sf_dir):
 
     with open(os.path.join(d, ".runner_out_sketch.lock"), "w") as lk:
         fcntl.flock(lk, fcntl.LOCK_EX)
+        _drop_stale_outs(out, "runner_out_sketch")
         run_pipeline(
             spark, os.path.join(d, "runner_units"), out, sketch_col="source"
         )
@@ -1945,6 +1959,7 @@ def runner_compacted_per_sink(spark, sf_dir):
 
     with open(os.path.join(d, ".runner_out_compact.lock"), "w") as lk:
         fcntl.flock(lk, fcntl.LOCK_EX)
+        _drop_stale_outs(out, "runner_out_compact")
         run_pipeline(spark, os.path.join(d, "runner_units"), out)
         compact_routed(spark, out, target_bytes=1 << 30)
     return (

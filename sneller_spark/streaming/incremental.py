@@ -7,9 +7,11 @@ pipeline/runner.py (unit manifests + resume).  This module is the
 capability upside: the SAME transform (parse -> enrich -> route) run as
 a Structured Streaming job over a file source, with
 ``foreachBatch`` writing the per-sink fan-out exactly-once per
-micro-batch (checkpointed) through the ingest unit kernel
-(pipeline/route.py ``write_unit``), which is how the pipeline would
-tail a landing bucket on a real cluster.
+micro-batch (checkpointed) through the enrich + parse + route + write
+code the ingest units run (pipeline/route.py ``write_unit``): each
+batch is enriched in Arrow from the lookup table fetched once per
+query, then parsed, routed and written.  That is how the pipeline
+would tail a landing bucket on a real cluster.
 """
 
 from __future__ import annotations

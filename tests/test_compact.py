@@ -257,3 +257,24 @@ def test_resume_false_on_compacted_dir_refused(spark, piped):
     compact_routed(spark, out, target_bytes=1 << 30)
     with pytest.raises(RuntimeError, match="resume=False"):
         run_pipeline(spark, inp, out, resume=False)
+
+
+def test_runner_entries_drop_stale_out_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """The runner catalog entries keep their out dirs in the flagship
+    dir, which outlives the process; building removes the siblings keyed
+    by another fixture or layout version and leaves the rest alone."""
+    from sneller_spark import query_catalog_ml as ml
+    from sneller_spark.pipeline.runner import LAYOUT_VERSION
+
+    monkeypatch.setattr(ml, "_FLAGSHIP_DIR", str(tmp_path))
+    stale = ["runner_out_sketch", "runner_out_sketch_unit-ids-v3",
+             "runner_out_compact_0123456789abcdef_unit-partials-v4"]
+    for name in stale:
+        (tmp_path / name / "manifests").mkdir(parents=True)
+    assert ml.runner_sketch_merged_hitters(spark, sf_dir).count() > 0
+    assert ml.runner_compacted_per_sink(spark, sf_dir).count() > 0
+    current = {f"runner_out_sketch_{LAYOUT_VERSION}",
+               f"runner_out_compact_{ml._fixture_version()}_{LAYOUT_VERSION}"}
+    outs = {d for d in os.listdir(tmp_path) if d.startswith("runner_out")}
+    assert outs == current
+    assert os.path.isdir(tmp_path / "runner_units")

@@ -339,14 +339,13 @@ def test_sketch_backfill_and_coverage_gate(spark, input_dir, tmp_path):
 
 def test_failing_unit_under_concurrency(spark, input_dir, tmp_path):
     """One unparseable unit among more units than the pool is wide:
-    the run raises (instead of waiting on the queued units it
-    cancelled), every unit that committed is whole (manifest ==
-    footers), the commit log holds only whole lines, and a resume after
-    the input is fixed converges to the one-shot result."""
+    the run raises the input-contract error naming the file (instead of
+    waiting on the queued units it cancelled), every unit that
+    committed is whole (manifest == footers), the commit log holds only
+    whole lines, and a resume after the input is fixed converges to the
+    one-shot result."""
     import shutil
     import threading
-
-    from py4j.protocol import Py4JJavaError
 
     from sneller_spark.pipeline.runner import _written_file_rows
 
@@ -374,7 +373,8 @@ def test_failing_unit_under_concurrency(spark, input_dir, tmp_path):
     t.start()
     t.join(timeout=300)
     assert not t.is_alive(), "run_pipeline hung after a unit failed"
-    assert len(raised) == 1 and isinstance(raised[0], Py4JJavaError)
+    assert len(raised) == 1 and isinstance(raised[0], ValueError)
+    assert str(bad) in str(raised[0])
 
     log = LineageLog(out)
     committed = log.committed_units()
@@ -415,21 +415,21 @@ def test_unit_jobs_inherit_caller_job_group(spark, input_dir, tmp_path):
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
     assert stats["units_processed_this_run"] == FILES
     assert set(tracker.getJobIdsForGroup(None)) - groupless_before == set()
-    # at least one write job per unit, plus the broadcast guard's
-    assert len(tracker.getJobIdsForGroup("runner-group")) > FILES
+    # one job per unit: the guarded fetches of the built-in lookup and
+    # rules tables read local relations, which starts no job
+    assert len(tracker.getJobIdsForGroup("runner-group")) == FILES
 
 
 def test_broadcast_guards_run_once_per_call(spark, input_dir, tmp_path, monkeypatch):
     """The lookup and rules tables are guarded once per run_pipeline
     call, not once per unit, and an oversized table is still refused
-    before any unit commits.  The lookup goes through
-    ``assert_broadcastable``; the rules, which the route kernel needs
-    on the driver, are fetched by ``collect_broadcastable`` under the
-    same guard, so the hook counts both."""
-    from sneller_spark.pipeline import route, runner
+    before any unit commits.  The kernel needs both on the driver:
+    the lookup is fetched by ``enrich.collect_lookup`` and the rules by
+    ``route.collect_routes``, each through ``collect_broadcastable``,
+    so the hook counts both."""
+    from sneller_spark.pipeline import enrich, route, runner
     from sneller_spark.pipeline.enrich import (
-        MAX_BROADCAST_ROWS, BroadcastGuardError, assert_broadcastable,
-        collect_broadcastable,
+        MAX_BROADCAST_ROWS, BroadcastGuardError, collect_broadcastable,
     )
 
     calls = []
@@ -440,7 +440,7 @@ def test_broadcast_guards_run_once_per_call(spark, input_dir, tmp_path, monkeypa
             return guard(df, *args, **kwargs)
         return counted
 
-    monkeypatch.setattr(runner, "assert_broadcastable", counting(assert_broadcastable))
+    monkeypatch.setattr(enrich, "collect_broadcastable", counting(collect_broadcastable))
     monkeypatch.setattr(route, "collect_broadcastable", counting(collect_broadcastable))
     run_pipeline(spark, input_dir, str(tmp_path / "once"))
     assert len(calls) == 2
@@ -452,3 +452,43 @@ def test_broadcast_guards_run_once_per_call(spark, input_dir, tmp_path, monkeypa
     with pytest.raises(BroadcastGuardError):
         run_pipeline(spark, input_dir, out)
     assert LineageLog(out).committed_units() == set()
+
+
+def test_run_starts_at_most_one_job_per_unit_plus_two(spark, input_dir, tmp_path):
+    """Each unit is one Spark job; with the two guarded table fetches a
+    run over N units starts at most N + 2 jobs, so a per-unit schema or
+    broadcast job cannot come back unnoticed."""
+    sc = spark.sparkContext
+    sc.setJobGroup("runner-job-count", "count run_pipeline jobs")
+    try:
+        stats = run_pipeline(spark, input_dir, str(tmp_path / "jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["units_processed_this_run"] == FILES
+    assert FILES <= len(sc.statusTracker().getJobIdsForGroup("runner-job-count")) <= FILES + 2
+
+
+def test_manifests_parsed_once_per_call(spark, input_dir, tmp_path, monkeypatch):
+    """run_pipeline parses each manifest committed before the call once
+    (for resume, stats and the final aggregate alike) and keeps the
+    ones it commits itself, so a fresh run parses none."""
+    read = []
+    real = LineageLog.read_manifest
+
+    def counted(self, unit_id):
+        read.append(unit_id)
+        return real(self, unit_id)
+
+    monkeypatch.setattr(LineageLog, "read_manifest", counted)
+    out = str(tmp_path / "reads")
+    run_pipeline(spark, input_dir, out, max_units=2)
+    assert read == []
+    first = LineageLog(out).committed_units()
+    assert len(first) == 2
+    stats = run_pipeline(spark, input_dir, out)
+    assert stats["units"] == FILES and stats["rows_in"] == N
+    assert sorted(read) == sorted(first)
+    read.clear()
+    run_pipeline(spark, input_dir, out)  # nothing left to process
+    assert sorted(read) == sorted(LineageLog(out).committed_units())
