@@ -43,7 +43,8 @@ class CMSketch(NamedTuple):
     seed: int
 
 
-def _cells(item_col: str, depth: int, width: int, seed: int):
+def cm_cells(item_col: str, depth: int, width: int, seed: int):
+    """The ``depth`` (d, bucket) cells an item of ``item_col`` counts in."""
     return F.array(
         *[
             F.struct(
@@ -70,7 +71,7 @@ def cm_sketch(
     assert depth >= 1 and width >= 1
     table = (
         df.filter(F.col(item_col).isNotNull())
-        .select(F.explode(_cells(item_col, depth, width, seed)).alias("c"))
+        .select(F.explode(cm_cells(item_col, depth, width, seed)).alias("c"))
         .groupBy(F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -106,7 +107,7 @@ def cm_estimate(sketch: CMSketch, items: DataFrame, item_col: str) -> DataFrame:
         items.filter(F.col(item_col).isNotNull())
         .select(
             F.col(item_col),
-            F.explode(_cells(item_col, sketch.depth, sketch.width, sketch.seed))
+            F.explode(cm_cells(item_col, sketch.depth, sketch.width, sketch.seed))
             .alias("c"),
         )
         .select(item_col, F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))

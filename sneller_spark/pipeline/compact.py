@@ -29,11 +29,9 @@ consistent — never double-counted, never short:
 
 Resume interplay: the lineage log keys units by INPUT identity, so a
 resumed `run_pipeline` still skips absorbed (committed) units and new
-units land beside the packs.  When sketches are enabled, a committed
-unit's sketch lives outside `routed/` and survives compaction — but a
-unit that never got its sketch could no longer be backfilled from its
-routed output, so compaction refuses to absorb it (the same coverage
-rule `read_merged_sketch` enforces).
+units land beside the packs.  Compaction never changes a manifest, so
+the aggregates and the merged sketch, both summed from the manifests'
+partials, stay valid.
 
 Packs can be re-absorbed by later generations (`pack-1` is a normal
 absorbable unit to `gen-2`), so repeated compaction converges to a
@@ -48,9 +46,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lineage import ROUTED_SUBDIR, LineageLog, written_file_rows
+from .route import write_routed
+
 COMPACTION_SUBDIR = "compaction"
-ROUTED_SUBDIR = "routed"
-SKETCH_SUBDIR = "sketches"
 
 
 def _manifests(out_dir: str) -> list[dict]:
@@ -123,10 +122,6 @@ def compact_routed(
     """Fold small committed units (and prior packs) into one new
     size-targeted pack generation.  Returns a stats dict; a no-op when
     fewer than two absorbable directories exist."""
-    from .lineage import LineageLog
-    from .route import write_routed
-    from .runner import _written_file_rows
-
     routed = os.path.join(out_dir, ROUTED_SUBDIR)
     log = LineageLog(out_dir)
     committed = log.committed_units()
@@ -161,22 +156,6 @@ def compact_routed(
                 candidates.append((uid, path, size))
     if len(candidates) < 2:
         return {"gen": None, "absorbed": 0, "reason": "nothing to compact"}
-
-    # sketch-coverage rule: a unit without its sketch could never be
-    # backfilled from its routed output once absorbed
-    sketch_dir = os.path.join(out_dir, SKETCH_SUBDIR)
-    if os.path.isdir(sketch_dir):
-        missing = [
-            uid for uid, _p, _s in candidates
-            if not uid.startswith("pack-")
-            and not os.path.exists(
-                os.path.join(sketch_dir, f"unit={uid}", "_SUCCESS"))
-        ]
-        if missing:
-            raise RuntimeError(
-                "compact_routed: units lack sketches and would lose "
-                f"their backfill source if absorbed: {sorted(missing)}; "
-                "resume run_pipeline(sketch_col=...) first")
 
     gen = 1 + max([m["gen"] for m in manifests] or [0])
     pack_id = f"pack-{gen}"
@@ -221,10 +200,10 @@ def compact_routed(
     write_routed(df, staging)
 
     # verify from footers only: staged rows == absorbed rows
-    staged_per_sink, _ = _written_file_rows(staging)
+    staged_per_sink, _ = written_file_rows(staging)
     want_per_sink: dict[str, int] = {}
     for p in absorb_dirs:
-        got, _ = _written_file_rows(p)
+        got, _ = written_file_rows(p)
         for k, v in got.items():
             want_per_sink[k] = want_per_sink.get(k, 0) + v
     if staged_per_sink != want_per_sink:

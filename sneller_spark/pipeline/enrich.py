@@ -75,17 +75,6 @@ def enrich_stage(
     """Left broadcast-join ``lookup`` onto ``df`` on ``key``; fill
     non-key lookup columns with defaults for unmatched rows."""
     assert_broadcastable(lookup, max_rows)
-    return enrich_join(df, lookup, key, defaults)
-
-
-def enrich_join(
-    df: DataFrame,
-    lookup: DataFrame,
-    key: str = "source",
-    defaults: dict[str, str] | None = None,
-) -> DataFrame:
-    """``enrich_stage`` without its guard, for a caller that has already
-    run ``assert_broadcastable`` on this exact ``lookup``."""
     if defaults is None:
         defaults = DEFAULTS
     out = df.join(F.broadcast(lookup), on=key, how="left")
@@ -98,7 +87,7 @@ def enrich_join(
 class Lookup(NamedTuple):
     """A lookup table on the driver, for ``enrich_columns``: the row of
     key ``keys[i]`` holds ``columns[c][i]``.  ``fields`` are the added
-    columns as ``enrich_join`` types them: a defaulted column is never
+    columns as ``enrich_stage`` types them: a defaulted column is never
     null."""
 
     key: str

@@ -12,6 +12,9 @@ Layout under the pipeline output directory:
       routed/unit=<unit_id>/sink_id=<sink>/*.parquet   (data)
       manifests/<unit_id>.json                          (lineage)
       _commit.log                                       (append-only)
+      _LAYOUT                       (pipeline/runner.py LAYOUT_VERSION)
+      aggregates/                   (sum of the manifests' partials)
+      compaction/gen-<k>.json       (pipeline/compact.py)
 
 A unit is only *committed* once its manifest file exists; the manifest
 is written via tmp-file + atomic rename AFTER the unit's data write
@@ -30,6 +33,10 @@ import time
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
+import pyarrow.parquet as pq
+
+ROUTED_SUBDIR = "routed"
+
 
 @dataclass
 class UnitManifest:
@@ -46,8 +53,7 @@ class UnitManifest:
     # file-identity fingerprint [basename, size, mtime_ns] per input:
     # an input rewritten in place (same name, new content) must not be
     # treated as committed — the FileTree ETag/mtime identity check
-    # (/root/reference/db/sync.go:366-430).  Empty on legacy manifests,
-    # which fall back to basename-only comparison.
+    # (/root/reference/db/sync.go:366-430).
     input_identity: list = field(default_factory=list)
     committed_at: float = field(default_factory=time.time)
     extra: dict[str, Any] = field(default_factory=dict)
@@ -79,21 +85,6 @@ class LineageLog:
             for f in os.listdir(self.manifest_dir)
             if f.endswith(".json")
         }
-
-    def is_committed(self, unit_id: str, inputs: list[str] | None = None) -> bool:
-        """A unit only counts as committed if its manifest exists AND
-        (when `inputs` is given) ``inputs_match`` the unit's current
-        files."""
-        path = os.path.join(self.manifest_dir, f"{unit_id}.json")
-        if not os.path.exists(path):
-            return False
-        if inputs is None:
-            return True
-        try:
-            m = self.read_manifest(unit_id)
-        except (OSError, ValueError, TypeError):
-            return False
-        return inputs_match(m, inputs)
 
     def read_manifests(self) -> dict[str, UnitManifest | None]:
         """Every committed unit's manifest, each file parsed once; None
@@ -129,28 +120,28 @@ def inputs_match(m: UnitManifest | None, inputs: list[str]) -> bool:
     """Whether manifest ``m`` records the unit's current ``inputs``: its
     input identity — (basename, size, mtime_ns) per file — must match,
     so an input rewritten in place with the same name is reprocessed
-    (the FileTree-identity check, reference db/sync.go:366-430).
-    Manifests written before input_identity existed fall back to
-    basename-only comparison."""
+    (the FileTree-identity check, reference db/sync.go:366-430)."""
     if m is None:
         return False
-    if m.input_identity:
-        try:
-            current = file_identity(inputs)
-        except OSError:
-            return False
-        return [list(e) for e in m.input_identity] == current
-    return sorted(os.path.basename(f) for f in m.inputs) == sorted(
-        os.path.basename(f) for f in inputs
-    )
+    try:
+        current = file_identity(inputs)
+    except OSError:
+        return False
+    return [list(e) for e in m.input_identity] == current
+
+
+def require_parsed(manifests: dict[str, UnitManifest | None]) -> None:
+    """Raise a ValueError naming every committed unit whose manifest
+    does not parse."""
+    unreadable = sorted(uid for uid, m in manifests.items() if m is None)
+    if unreadable:
+        raise ValueError(f"manifests of committed units {unreadable} do not parse")
 
 
 def total_stats(manifests: dict[str, UnitManifest | None]) -> dict[str, int]:
     """ExecStats analog (reference plan/stats.go:28-60) over the
     committed units' manifests."""
-    unreadable = sorted(uid for uid, m in manifests.items() if m is None)
-    if unreadable:
-        raise ValueError(f"manifests of committed units {unreadable} do not parse")
+    require_parsed(manifests)
     ms = manifests.values()
     return {
         "units": len(manifests),
@@ -158,3 +149,23 @@ def total_stats(manifests: dict[str, UnitManifest | None]) -> dict[str, int]:
         "rows_routed": sum(m.rows_routed for m in ms),
         "input_bytes": sum(m.input_bytes for m in ms),
     }
+
+
+def written_file_rows(unit_dir: str) -> tuple[dict[str, int], dict[str, int]]:
+    """Per-sink and per-file row counts of the routed files under one
+    ``unit=<id>`` directory, read from parquet FOOTERS only (no data
+    scan, no Spark job)."""
+    per_sink: dict[str, int] = {}
+    per_file: dict[str, int] = {}
+    for root, _dirs, fnames in os.walk(unit_dir):
+        part = os.path.basename(root)
+        if not part.startswith("sink_id="):
+            continue
+        sink = part[len("sink_id="):]
+        for fn in fnames:
+            if not fn.endswith(".parquet"):
+                continue
+            n = pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
+            per_sink[sink] = per_sink.get(sink, 0) + n
+            per_file[f"{sink}/{fn}"] = n
+    return per_sink, per_file

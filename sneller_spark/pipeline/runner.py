@@ -52,13 +52,15 @@ from pyspark.util import inheritable_thread_target
 from ..datagen import TOKENS_SCHEMA
 from ..lookups import lookup_source_df, route_rules_df
 from .aggregate import PARTIALS_SCHEMA, merge_partials
+from .compact import compaction_view, read_routed_consistent
 from .enrich import Lookup, collect_lookup
-from .lineage import LineageLog, UnitManifest, file_identity, inputs_match, total_stats
+from .lineage import (
+    ROUTED_SUBDIR, LineageLog, UnitManifest, file_identity, inputs_match, require_parsed,
+    total_stats, written_file_rows,
+)
 from .route import Routes, collect_routes, route_rows, write_unit_file
 
-ROUTED_SUBDIR = "routed"
 AGG_SUBDIR = "aggregates"
-SKETCH_SUBDIR = "sketches"
 
 # Output-layout version: bumped whenever the unit-id scheme or the
 # manifest contents change.  read_routed reads the WHOLE routed dir and
@@ -71,14 +73,19 @@ SKETCH_SUBDIR = "sketches"
 LAYOUT_VERSION = "unit-partials-v4"
 
 
+def _stamped_layout(out_dir: str) -> str | None:
+    marker = os.path.join(out_dir, "_LAYOUT")
+    if not os.path.exists(marker):
+        return None
+    with open(marker) as f:
+        return f.read().strip()
+
+
 def _check_layout_version(out_dir: str, routed_dir: str, log) -> None:
     """Refuse to resume an out_dir whose unit-id layout predates
     LAYOUT_VERSION; stamp fresh output dirs atomically."""
     marker = os.path.join(out_dir, "_LAYOUT")
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
+    current = _stamped_layout(out_dir)
     if current == LAYOUT_VERSION:
         return
     has_state = os.path.isdir(routed_dir) or log.committed_units()
@@ -197,119 +204,6 @@ def _unit_input(path: str) -> tuple[int, T.StructType]:
     return pf.num_row_groups, schema
 
 
-def _written_file_rows(unit_dir: str) -> tuple[dict[str, int], dict[str, int]]:
-    """Per-sink and per-file row counts of a just-written unit, read
-    from parquet FOOTERS only (no data scan, no Spark job)."""
-    per_sink: dict[str, int] = {}
-    per_file: dict[str, int] = {}
-    for root, _dirs, fnames in os.walk(unit_dir):
-        part = os.path.basename(root)
-        if not part.startswith("sink_id="):
-            continue
-        sink = part[len("sink_id="):]
-        for fn in fnames:
-            if not fn.endswith(".parquet"):
-                continue
-            n = pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-            per_sink[sink] = per_sink.get(sink, 0) + n
-            per_file[f"{sink}/{fn}"] = n
-    return per_sink, per_file
-
-
-def _sketch_params_marker(sketch_dir: str, depth: int, width: int, seed: int) -> None:
-    """Stamp (or validate) the sketch hash parameters for an output
-    dir: every unit's sketch must probe identical (depth, width, seed)
-    or the cell-wise merge would be garbage — a resume with different
-    parameters is refused, mirroring cm_merge's own check."""
-    import json
-
-    marker = os.path.join(sketch_dir, "_params.json")
-    want = {"depth": depth, "width": width, "seed": seed}
-    if os.path.exists(marker):
-        with open(marker) as f:
-            have = json.load(f)
-        if have != want:
-            raise ValueError(
-                f"sketch parameter mismatch on resume: dir has {have}, "
-                f"run requested {want}; use a fresh out_dir or match them"
-            )
-        return
-    os.makedirs(sketch_dir, exist_ok=True)
-    tmp = f"{marker}.{os.getpid()}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(want, f)
-    os.replace(tmp, marker)
-
-
-def _write_unit_sketch(
-    spark: SparkSession, unit_dir: str, sketch_col: str, unit_sketch_dir: str,
-    sketch_params: tuple[int, int, int],
-) -> None:
-    """Build one unit's fixed-size CM summary from a column-pruned read
-    of its routed output and write it durably; overwrite keeps re-runs
-    idempotent.  A unit that routed no rows has no files to read and
-    gets an empty summary."""
-    from ..operators.sketch import cm_sketch
-
-    if _written_file_rows(unit_dir)[1]:
-        col_df = spark.read.parquet(unit_dir).select(sketch_col)
-    else:
-        col_df = spark.range(0).select(F.lit(None).cast("string").alias(sketch_col))
-    depth, width, seed = sketch_params
-    sk = cm_sketch(col_df, sketch_col, depth=depth, width=width, seed=seed)
-    sk.df.write.mode("overwrite").parquet(unit_sketch_dir)
-
-
-def read_merged_sketch(spark: SparkSession, out_dir: str):
-    """Union every committed unit's CM sketch and fold cell-wise —
-    the n-way cm_merge.  Input is units x depth x width bucket rows
-    (fixed size per unit, independent of unit cardinality), so the
-    merge cost never grows with data volume: this is the
-    shipped-summary story — each ingest unit ships a fixed-size
-    frequency summary, and corpus-wide heavy-hitter pruning runs on
-    the merged summary without re-reading the corpus.
-
-    Coverage is verified against the commit log before merging: a unit
-    committed WITHOUT a sketch (an earlier run without sketch_col, or
-    one predating sketches) would silently undercount the merged
-    summary and break the CM never-undercount guarantee that
-    heavy-hitter pruning's no-false-negatives property rests on —
-    such a gap raises instead of merging."""
-    import json
-
-    from ..operators.sketch import CMSketch
-
-    sketch_dir = os.path.join(out_dir, SKETCH_SUBDIR)
-    with open(os.path.join(sketch_dir, "_params.json")) as f:
-        p = json.load(f)
-    committed = LineageLog(out_dir).committed_units()
-    # a sketch only counts with its _SUCCESS marker: a crash mid-write
-    # leaves part files that would merge as a partial (undercounting)
-    # summary — exactly what this gate exists to refuse
-    have = {
-        d[len("unit="):]
-        for d in os.listdir(sketch_dir)
-        if d.startswith("unit=")
-        and os.path.exists(os.path.join(sketch_dir, d, "_SUCCESS"))
-    }
-    missing = sorted(committed - have)
-    if missing:
-        raise ValueError(
-            "read_merged_sketch: committed units lack sketches (written "
-            "by a run without sketch_col?): "
-            f"{missing[:5]}{'...' if len(missing) > 5 else ''}; the merged "
-            "summary would undercount — re-run run_pipeline with "
-            "sketch_col set (it backfills sketches for committed units "
-            "from their routed output without reprocessing them)"
-        )
-    merged = (
-        spark.read.parquet(sketch_dir)
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    return CMSketch(merged, p["depth"], p["width"], p["seed"])
-
-
 def _run_unit(
     spark: SparkSession,
     unit_id: str,
@@ -317,13 +211,10 @@ def _run_unit(
     lookup: Lookup,
     routes: Routes,
     routed_dir: str,
-    sketch_col: str | None,
-    sketch_dir: str,
-    sketch_params: tuple[int, int, int],
 ) -> UnitManifest:
-    """Check, read, transform and durably write one unit (plus its
-    sketch when ``sketch_col`` is set); return its manifest for the
-    caller to commit.  Runs on a ``run_pipeline`` pool thread."""
+    """Check, read, transform and durably write one unit; return its
+    manifest for the caller to commit.  Runs on a ``run_pipeline`` pool
+    thread."""
     t0 = time.monotonic()
     (path,) = files  # list_units makes one unit per file
     row_groups, in_schema = _unit_input(path)
@@ -335,18 +226,10 @@ def _run_unit(
     shutil.rmtree(unit_dir, ignore_errors=True)
     partials = merge_partials(write_unit_file(
         spark, path, row_groups, in_schema, lookup, routes, unit_dir) if row_groups else [])
-    if sketch_col is not None:
-        # sketch BEFORE the commit: a committed unit therefore always
-        # has a durable sketch, and the overwrite keeps a re-processed
-        # unit idempotent
-        _write_unit_sketch(
-            spark, unit_dir, sketch_col,
-            os.path.join(sketch_dir, f"unit={unit_id}"), sketch_params,
-        )
 
     # lineage + metrics from parquet footers of the files just
     # written (counts exactly what was committed, zero extra scans)
-    per_sink, per_file = _written_file_rows(unit_dir)
+    per_sink, per_file = written_file_rows(unit_dir)
     return UnitManifest(
         unit_id=unit_id,
         inputs=files,
@@ -368,21 +251,11 @@ def run_pipeline(
     out_dir: str,
     resume: bool = True,
     max_units: int | None = None,
-    sketch_col: str | None = None,
-    sketch_params: tuple[int, int, int] = (4, 1024, 7),
 ) -> dict:
     """Run (or resume) the pipeline over an input table directory.
 
     Returns ExecStats-style metrics.  ``max_units`` caps how many units
     this invocation processes — used by tests to simulate a killed job.
-
-    ``sketch_col`` opts into per-unit count-min sketches: each unit
-    writes a fixed-size (depth x width) frequency summary of that
-    column alongside its routed output (before the unit commits, so a
-    committed unit always has its sketch; overwrite keeps re-runs
-    idempotent).  ``read_merged_sketch`` folds them corpus-wide —
-    heavy-hitter candidates then come from the merged summary instead
-    of a second pass over the routed table.
     """
     log = LineageLog(out_dir)
     routed_dir = os.path.join(out_dir, ROUTED_SUBDIR)
@@ -401,8 +274,6 @@ def run_pipeline(
         # a unit already absorbed into a compaction pack must never be
         # reprocessed: its old rows live in the pack, so a rewrite
         # would double-count in read_routed
-        from .compact import compaction_view
-
         absorbed, _packs = compaction_view(out_dir)
         clash = sorted(uid for uid, _f in todo if uid in absorbed)
         if clash and not resume:
@@ -418,45 +289,6 @@ def run_pipeline(
                 "compaction (use a fresh output dir to re-ingest)")
     if max_units is not None:
         todo = todo[:max_units]
-
-    sketch_dir = os.path.join(out_dir, SKETCH_SUBDIR)
-    if sketch_col is not None:
-        _sketch_params_marker(sketch_dir, *sketch_params)
-        # backfill: a unit committed by an earlier run WITHOUT
-        # sketch_col is skipped by resume and would otherwise never get
-        # a sketch, leaving the merged summary a silent undercount
-        # (read_merged_sketch refuses such gaps).  Building from the
-        # unit's routed output is a column-pruned read — no reprocess.
-        # Iterate the COMMIT LOG, not the current input listing: a
-        # committed unit whose input file has since been deleted still
-        # contributes routed rows and still needs its sketch.  Units
-        # about to be reprocessed (identity changed -> in todo) are
-        # excluded; they write a fresh sketch in the loop below.
-        from .compact import compaction_view
-
-        absorbed_units, _packs = compaction_view(out_dir)
-        todo_ids = {uid for uid, _ in todo}
-        for uid in sorted(set(manifests) - todo_ids):
-            sdir = os.path.join(sketch_dir, f"unit={uid}")
-            if os.path.exists(os.path.join(sdir, "_SUCCESS")):
-                continue
-            unit_dir = os.path.join(routed_dir, f"unit={uid}")
-            if not os.path.isdir(unit_dir):
-                if uid in absorbed_units:
-                    # compact_routed refuses to absorb sketch-less
-                    # units only while sketches/ exists; enabling
-                    # sketch_col AFTER compaction hits this instead of
-                    # a silent undercount
-                    raise RuntimeError(
-                        f"unit {uid} was compacted before sketches "
-                        "were enabled; its per-unit backfill source is "
-                        "gone — rebuild sketches from read_routed() or "
-                        "start a fresh output dir with sketch_col set")
-                raise RuntimeError(
-                    f"committed unit {uid} has no routed output and no "
-                    "compaction record — the routed table was modified "
-                    "out-of-band; cannot backfill its sketch")
-            _write_unit_sketch(spark, unit_dir, sketch_col, sdir, sketch_params)
 
     if todo:
         # fetched and guarded once per run; every unit's kernel carries them
@@ -475,7 +307,6 @@ def run_pipeline(
                 pool.submit(
                     inheritable_thread_target(spark)(_run_unit),
                     spark, unit_id, files, lookup, routes, routed_dir,
-                    sketch_col, sketch_dir, sketch_params,
                 )
                 for unit_id, files in todo
             ]
@@ -536,9 +367,42 @@ def read_aggregates(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, AGG_SUBDIR))
 
 
+def read_merged_sketch(spark: SparkSession, out_dir: str):
+    """The count-min sketch of ``source`` over every committed unit,
+    built from the manifests' partials: each non-null source's row
+    count is summed once (``merge_partials``) and added to its cells
+    with ``cm_sketch``'s hashing and default (depth, width, seed).  It
+    equals ``cm_sketch(read_routed(spark, out_dir), "source")`` cell
+    for cell, reads no routed data, and holds after compaction, which
+    never changes manifests.  Heavy-hitter pruning then runs on this
+    fixed-size summary instead of a second pass over the routed table.
+    A committed manifest that does not parse raises a ValueError naming
+    its unit, and so does an out dir not stamped LAYOUT_VERSION, whose
+    manifests may lack partials."""
+    from ..operators.sketch import CMSketch, cm_cells
+
+    layout = _stamped_layout(out_dir)
+    if layout != LAYOUT_VERSION:
+        raise ValueError(f"output dir {out_dir!r} has layout {layout!r}, not "
+                         f"{LAYOUT_VERSION!r}; its manifests may lack partials")
+    manifests = LineageLog(out_dir).read_manifests()
+    require_parsed(manifests)
+    # one (None, source, None, n_rows, None) row per non-null source
+    per_source = merge_partials(
+        (None, source, None, n, None)
+        for m in manifests.values() for _sink, source, _level, n, _tok in m.partials
+        if source is not None)
+    depth, width, seed = 4, 1024, 7  # cm_sketch's defaults
+    cells = (
+        spark.createDataFrame([(r[1], r[3]) for r in per_source], "source string, n bigint")
+        .select(F.explode(cm_cells("source", depth, width, seed)).alias("c"), "n")
+        .groupBy(F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))
+        .agg(F.sum("n").alias("cnt"))
+    )
+    return CMSketch(cells, depth, width, seed)
+
+
 def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
     """Consistent view of the routed table: live units + committed
     compaction packs, absorbed units excluded (pipeline/compact.py)."""
-    from .compact import read_routed_consistent
-
     return read_routed_consistent(spark, out_dir)

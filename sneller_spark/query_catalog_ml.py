@@ -1860,17 +1860,16 @@ def sketch_heavy_hitters_exact(spark, sf_dir):
 def runner_sketch_merged_hitters(spark, sf_dir):
     """The runner's shipped-summary story, end-to-end and
     value-checked: run_pipeline ingests the flagship input as FOUR
-    units (checkpoint/resume granularity), writing a fixed-size
-    count-min sketch of `source` per unit BEFORE each commit;
-    read_merged_sketch folds them cell-wise (the n-way cm_merge, with
-    the coverage gate refusing sketchless committed units); candidates
-    whose merged estimate >= 1000 are exactly recounted from the
-    routed table (CM never under-counts, so no true hitter is pruned)
-    and the exact filter drops false positives.  The oracle is a plain
-    GROUP BY ... HAVING over the same input files — routing preserves
-    rows 1:1, so merged-sketch pruning + recount must reproduce it
-    exactly.  Idempotent across invocations: committed units are
-    skipped on resume (input-identity checked), sketches overwrite."""
+    units (checkpoint/resume granularity), each manifest storing its
+    per-source partial counts; read_merged_sketch builds the count-min
+    sketch of `source` from those committed partials (no routed data
+    read); candidates whose merged estimate >= 1000 are exactly
+    recounted from the routed table (CM never under-counts, so no true
+    hitter is pruned) and the exact filter drops false positives.  The
+    oracle is a plain GROUP BY ... HAVING over the same input files —
+    routing preserves rows 1:1, so merged-sketch pruning + recount must
+    reproduce it exactly.  Idempotent across invocations: committed
+    units are skipped on resume (input-identity checked)."""
     from .operators.sketch import cm_estimate
     from .pipeline.runner import LAYOUT_VERSION, read_merged_sketch, read_routed, run_pipeline
 
@@ -1888,9 +1887,7 @@ def runner_sketch_merged_hitters(spark, sf_dir):
     with open(os.path.join(d, ".runner_out_sketch.lock"), "w") as lk:
         fcntl.flock(lk, fcntl.LOCK_EX)
         _drop_stale_outs(out, "runner_out_sketch")
-        run_pipeline(
-            spark, os.path.join(d, "runner_units"), out, sketch_col="source"
-        )
+        run_pipeline(spark, os.path.join(d, "runner_units"), out)
     sk = read_merged_sketch(spark, out)
     routed = read_routed(spark, out)
     cand = cm_estimate(sk, routed.select("source").distinct(), "source").filter(

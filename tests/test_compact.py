@@ -1,6 +1,5 @@
 """Compaction (pipeline/compact.py): row-set preservation, crash
-consistency of the manifest protocol, resume interplay, and the
-sketch-coverage guard."""
+consistency of the manifest protocol and resume interplay."""
 from __future__ import annotations
 
 import json
@@ -123,22 +122,6 @@ def test_absorbed_dirs_left_on_disk_do_not_double_count(spark, piped):
     routed = os.path.join(out, "routed")
     assert sum(1 for d in os.listdir(routed) if d.startswith("unit=")) == 4
     assert read_routed(spark, out).count() == before
-
-
-def test_sketch_coverage_guard(spark, tmp_path):
-    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
-    _mk_input(inp, units=2)
-    run_pipeline(spark, inp, out, sketch_col="source")
-    # drop one unit's sketch: compaction must refuse
-    sk = os.path.join(out, "sketches")
-    victim = next(d for d in sorted(os.listdir(sk)) if d.startswith("unit="))
-    shutil.rmtree(os.path.join(sk, victim))
-    with pytest.raises(RuntimeError, match="lack sketches"):
-        compact_routed(spark, out, target_bytes=1 << 30)
-    # restore coverage via the runner's backfill, then compaction works
-    run_pipeline(spark, inp, out, sketch_col="source")
-    info = compact_routed(spark, out, target_bytes=1 << 30)
-    assert info["gen"] == 1
 
 
 def test_reprocess_of_absorbed_unit_refused(spark, piped):

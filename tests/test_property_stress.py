@@ -23,7 +23,7 @@ from parse_reference import parse_stage
 from sneller_spark.datagen import SOURCES, TOKENS_SCHEMA
 from sneller_spark.lookups import lookup_source_df, route_rules_df
 from sneller_spark.oracle import run_oracle
-from sneller_spark.pipeline.enrich import enrich_join
+from sneller_spark.pipeline.enrich import enrich_stage
 from sneller_spark.pipeline.route import route_stage
 from sneller_spark.pipeline.runner import transform
 from sneller_spark.vocab import MOTIF_BASE, N_MOTIFS, VOCAB_SIZE
@@ -91,7 +91,7 @@ def _transform(spark, df, kernel: str):
     parse followed by the Catalyst enrich and route joins."""
     if kernel == "dict":
         return transform(spark, df)
-    enriched = enrich_join(parse_stage(df), lookup_source_df(spark))
+    enriched = enrich_stage(parse_stage(df), lookup_source_df(spark))
     return route_stage(enriched, route_rules_df(spark))
 
 
@@ -388,13 +388,13 @@ def test_veneer_fuzz_curation(spark, _veneer_registered, seed):
 
 @pytest.mark.parametrize("seed", _VENEER_SEEDS)
 def test_veneer_fuzz_cm_bucket(spark, _veneer_registered, seed):
-    from sneller_spark.operators.sketch import _cells
+    from sneller_spark.operators.sketch import cm_cells
 
     df = _veneer_fuzz_df(spark, seed)
     _assert_veneer_eq(spark, df, [
         (
             f"cm_bucket(key, {d}, 64, 7)",
-            F.element_at(_cells("key", 4, 64, 7), d + 1)["bucket"],
+            F.element_at(cm_cells("key", 4, 64, 7), d + 1)["bucket"],
         )
         for d in range(4)
     ])

@@ -12,19 +12,23 @@ import pytest
 
 from sneller_spark.datagen import generate_chunk
 from sneller_spark.oracle import run_oracle
-from sneller_spark.pipeline.lineage import LineageLog
+from sneller_spark.pipeline.lineage import LineageLog, inputs_match
 from sneller_spark.pipeline.runner import read_aggregates, run_pipeline, unit_id_for
 
 N = 6_000
 FILES = 4
 
 
-def _ids(input_dir: str) -> list[str]:
+def _paths(input_dir: str) -> list[str]:
     return [
-        unit_id_for(os.path.join(input_dir, f))
+        os.path.join(input_dir, f)
         for f in sorted(os.listdir(input_dir))
         if f.endswith(".parquet")
     ]
+
+
+def _ids(input_dir: str) -> list[str]:
+    return [unit_id_for(p) for p in _paths(input_dir)]
 
 
 @pytest.fixture(scope="module")
@@ -112,7 +116,8 @@ def test_resume_after_partial_uncommitted_write(spark, input_dir, tmp_path):
     os.makedirs(unit_dir, exist_ok=True)
     pdf = generate_chunk(0, 10)
     pdf.to_parquet(os.path.join(unit_dir, "part-garbage.parquet"), index=False)
-    assert not LineageLog(out).is_committed(_ids(input_dir)[1])
+    uid, path = _ids(input_dir)[1], _paths(input_dir)[1]
+    assert not inputs_match(LineageLog(out).read_manifests().get(uid), [path])
 
     stats = run_pipeline(spark, input_dir, out)  # resume
     assert stats["units"] == FILES and stats["rows_in"] == N
@@ -154,7 +159,7 @@ def test_new_file_sorting_first_is_processed_not_skipped(spark, tmp_path):
 
 
 def test_committed_id_with_changed_inputs_reprocessed(spark, tmp_path):
-    """is_committed must verify manifest inputs, not just the id."""
+    """A committed id only counts for the inputs its manifest records."""
     d = tmp_path / "swap_input"
     d.mkdir()
     generate_chunk(0, 1000).to_parquet(d / "x.parquet", index=False)
@@ -162,14 +167,14 @@ def test_committed_id_with_changed_inputs_reprocessed(spark, tmp_path):
     run_pipeline(spark, str(d), out)
     uid = _ids(str(d))[0]
     log = LineageLog(out)
-    assert log.is_committed(uid, inputs=[str(d / "x.parquet")])
+    assert inputs_match(log.read_manifests().get(uid), [str(d / "x.parquet")])
     # same id queried with a different input list -> not committed
-    assert not log.is_committed(uid, inputs=[str(d / "y.parquet")])
+    assert not inputs_match(log.read_manifests().get(uid), [str(d / "y.parquet")])
 
 
 def test_rewritten_input_not_treated_as_committed(spark, tmp_path):
     """An input rewritten IN PLACE (same name, new content) must be
-    reprocessed: is_committed checks (basename, size, mtime_ns)
+    reprocessed: inputs_match checks (basename, size, mtime_ns)
     identity, not just the name (ADVICE r2; reference FileTree
     ETag/mtime check, db/sync.go:366-430)."""
     d = tmp_path / "rewrite_input"
@@ -248,34 +253,49 @@ def test_same_basename_different_dirs_not_confused(spark, tmp_path):
     pd.testing.assert_frame_equal(got, _norm(exp))
 
 
-def test_unit_sketches_merge_to_whole_corpus(spark, input_dir, tmp_path):
-    """Per-unit CM sketches written during (killed + resumed) ingest
-    merge — cell for cell — into the sketch of the whole routed
-    corpus, and heavy hitters pruned by the merged summary equal the
-    whole-corpus exact recount.  This is the shipped-summary contract:
-    each unit ships a fixed-size summary; corpus-wide pruning never
-    re-reads the corpus."""
-    from pyspark.sql import functions as F
+def _sketch_cells(sk) -> list[tuple]:
+    return sorted(map(tuple, sk.df.select("d", "bucket", "cnt").toPandas().values.tolist()))
 
-    from sneller_spark.operators.sketch import cm_estimate, cm_sketch
+
+def _assert_merged_sketch_equals_rescan(spark, out: str):
+    """read_merged_sketch, built from the manifests' partials, equals
+    the sketch of a full scan of the routed table cell for cell."""
+    from sneller_spark.operators.sketch import cm_sketch
     from sneller_spark.pipeline.runner import read_merged_sketch, read_routed
 
-    out = str(tmp_path / "sk")
-    p1 = run_pipeline(spark, input_dir, out, max_units=2, sketch_col="source")
-    assert p1["units_processed_this_run"] == 2
-    p2 = run_pipeline(spark, input_dir, out, sketch_col="source")
-    assert p2["units"] == FILES
-
     merged = read_merged_sketch(spark, out)
-    routed = read_routed(spark, out)
-    whole = cm_sketch(routed, "source",
-                      depth=merged.depth, width=merged.width, seed=merged.seed)
-    cell = lambda df: sorted(  # noqa: E731
-        map(tuple, df.select("d", "bucket", "cnt").toPandas().values.tolist())
-    )
-    assert cell(merged.df) == cell(whole.df)
+    whole = cm_sketch(read_routed(spark, out), "source")
+    assert (merged.depth, merged.width, merged.seed) == (whole.depth, whole.width, whole.seed)
+    assert merged.df.schema.simpleString() == "struct<d:int,bucket:bigint,cnt:bigint>"
+    assert _sketch_cells(merged) == _sketch_cells(whole)
+    return merged
+
+
+def test_unit_sketches_merge_to_whole_corpus(spark, input_dir, tmp_path):
+    """The merged CM sketch of ``source`` comes from the committed
+    manifests' partials and equals — cell for cell — the sketch of the
+    whole routed corpus: after a killed and resumed ingest, after
+    compaction, and with a null source (never counted).  Heavy hitters
+    pruned by it equal the whole-corpus exact recount: corpus-wide
+    pruning never re-reads the corpus."""
+    from pyspark.sql import functions as F
+
+    from sneller_spark.operators.sketch import cm_estimate
+    from sneller_spark.pipeline.compact import compact_routed
+    from sneller_spark.pipeline.runner import read_routed
+
+    out = str(tmp_path / "sk")
+    p1 = run_pipeline(spark, input_dir, out, max_units=2)
+    assert p1["units_processed_this_run"] == 2
+    _assert_merged_sketch_equals_rescan(spark, out)
+    p2 = run_pipeline(spark, input_dir, out)
+    assert p2["units"] == FILES
+    merged = _assert_merged_sketch_equals_rescan(spark, out)
+    # the sketch has no files of its own
+    assert not os.path.exists(os.path.join(out, "sketches"))
 
     # heavy hitters from the merged summary == exact recount
+    routed = read_routed(spark, out)
     threshold = 500
     cand = cm_estimate(
         merged, routed.select("source").distinct(), "source"
@@ -293,48 +313,47 @@ def test_unit_sketches_merge_to_whole_corpus(spark, input_dir, tmp_path):
     }
     assert got == expect and got  # non-vacuous
 
-    # parameter mismatch on resume is refused, mirroring cm_merge
-    with pytest.raises(ValueError, match="sketch parameter mismatch"):
-        run_pipeline(spark, input_dir, out, sketch_col="source",
-                     sketch_params=(4, 2048, 7))
+    # compaction moves rows into a pack but leaves the manifests alone
+    assert compact_routed(spark, out, target_bytes=1 << 30)["absorbed"] == FILES
+    assert _sketch_cells(_assert_merged_sketch_equals_rescan(spark, out)) == _sketch_cells(merged)
+
+    # one null-source row: routed, but in no cell
+    d = tmp_path / "null_source_input"
+    d.mkdir()
+    pdf = generate_chunk(0, 700)
+    pdf.loc[3, "source"] = None
+    pdf.to_parquet(d / "part-0.parquet", index=False)
+    generate_chunk(700, 1400).to_parquet(d / "part-1.parquet", index=False)
+    null_out = str(tmp_path / "sk_null")
+    assert run_pipeline(spark, str(d), null_out)["rows_routed"] == 1400
+    assert read_routed(spark, null_out).filter(F.col("source").isNull()).count() == 1
+    sk = _assert_merged_sketch_equals_rescan(spark, null_out)
+    assert sk.df.filter(F.col("d") == 0).groupBy().sum("cnt").collect()[0][0] == 1399
 
 
-def test_sketch_backfill_and_coverage_gate(spark, input_dir, tmp_path):
-    """Units committed by a run WITHOUT sketch_col get their sketches
-    BACKFILLED (from routed output, no reprocess) when a later run
-    passes sketch_col; and read_merged_sketch refuses a sketch set
-    that does not cover every committed unit (ADVICE r5: a silent
-    undercount would break CM's no-false-negatives pruning)."""
-    import shutil
+def test_merged_sketch_refuses_unreadable_manifests(spark, input_dir, tmp_path):
+    """read_merged_sketch raises instead of returning a sketch short of
+    some rows: on a committed manifest that does not parse (naming its
+    unit), on an out dir of another layout, whose manifests may lack
+    partials, and on a dir no run wrote (creating nothing there)."""
+    from sneller_spark.pipeline.runner import read_merged_sketch
 
-    from sneller_spark.operators.sketch import cm_sketch
-    from sneller_spark.pipeline.runner import (
-        SKETCH_SUBDIR, read_merged_sketch, read_routed,
-    )
+    out = tmp_path / "corrupt"
+    run_pipeline(spark, input_dir, str(out), max_units=2)
+    victim = _ids(input_dir)[1]
+    good = (out / "manifests" / f"{victim}.json").read_text()
+    (out / "manifests" / f"{victim}.json").write_text('{"unit_id": ')
+    with pytest.raises(ValueError, match=victim):
+        read_merged_sketch(spark, str(out))
 
-    out = str(tmp_path / "bf")
-    p1 = run_pipeline(spark, input_dir, out)            # no sketches at all
-    assert p1["units"] == FILES
-    p2 = run_pipeline(spark, input_dir, out, sketch_col="source")
-    assert p2["units_processed_this_run"] == 0          # nothing reprocessed
+    (out / "manifests" / f"{victim}.json").write_text(good)
+    (out / "_LAYOUT").write_text("unit-ids-v3")
+    with pytest.raises(ValueError, match="unit-ids-v3"):
+        read_merged_sketch(spark, str(out))
 
-    merged = read_merged_sketch(spark, out)             # backfill covered all
-    routed = read_routed(spark, out)
-    whole = cm_sketch(routed, "source",
-                      depth=merged.depth, width=merged.width, seed=merged.seed)
-    cell = lambda df: sorted(  # noqa: E731
-        map(tuple, df.select("d", "bucket", "cnt").toPandas().values.tolist())
-    )
-    assert cell(merged.df) == cell(whole.df)
-
-    # knock out one unit's sketch -> the merge must refuse, naming it
-    victim = sorted(
-        d for d in os.listdir(os.path.join(out, SKETCH_SUBDIR))
-        if d.startswith("unit=")
-    )[0]
-    shutil.rmtree(os.path.join(out, SKETCH_SUBDIR, victim))
-    with pytest.raises(ValueError, match="lack sketches"):
-        read_merged_sketch(spark, out)
+    with pytest.raises(ValueError, match="layout None"):
+        read_merged_sketch(spark, str(tmp_path / "never_written"))
+    assert not (tmp_path / "never_written").exists()
 
 
 def test_failing_unit_under_concurrency(spark, input_dir, tmp_path):
@@ -347,7 +366,7 @@ def test_failing_unit_under_concurrency(spark, input_dir, tmp_path):
     import shutil
     import threading
 
-    from sneller_spark.pipeline.runner import _written_file_rows
+    from sneller_spark.pipeline.lineage import written_file_rows
 
     names = sorted(f for f in os.listdir(input_dir) if f.endswith(".parquet"))
     n_units = spark.sparkContext.defaultParallelism + 4
@@ -380,7 +399,7 @@ def test_failing_unit_under_concurrency(spark, input_dir, tmp_path):
     committed = log.committed_units()
     assert committed and bad_id not in committed
     for uid in committed:
-        per_sink, _ = _written_file_rows(os.path.join(out, "routed", f"unit={uid}"))
+        per_sink, _ = written_file_rows(os.path.join(out, "routed", f"unit={uid}"))
         assert log.read_manifest(uid).rows_routed == sum(per_sink.values())
     with open(os.path.join(out, "_commit.log")) as f:
         text = f.read()

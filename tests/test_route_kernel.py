@@ -130,12 +130,12 @@ def test_final_aggregate_starts_no_job(spark, tmp_path):
 def test_transform_and_route_stage_agree(spark):
     """transform's kernel and the Catalyst chain give the same rows."""
     from sneller_spark.lookups import lookup_source_df
-    from sneller_spark.pipeline.enrich import enrich_join
+    from sneller_spark.pipeline.enrich import enrich_stage
     from sneller_spark.pipeline.parse import parse_stage_dict
 
     df = spark.createDataFrame(generate_chunk(0, 1500))
     got = transform(spark, df)
-    want = route_stage(enrich_join(parse_stage_dict(df), lookup_source_df(spark)),
+    want = route_stage(enrich_stage(parse_stage_dict(df), lookup_source_df(spark)),
                        route_rules_df(spark))
     assert got.columns == want.columns
     assert _rows(got) == _rows(want)
@@ -156,19 +156,24 @@ def test_write_routed_escapes_sink_dirs(spark, tmp_path):
 
 
 def test_empty_unit_commits_with_sketch(spark, tmp_path):
-    """A unit that routes no rows writes no files, commits zero rows
-    and still gets its (empty) sketch."""
-    from sneller_spark.pipeline.runner import read_merged_sketch
+    """A unit that routes no rows writes no files and commits zero rows
+    and no partials; the merged sketch, summed from the manifests'
+    partials, still equals the sketch of the routed table."""
+    from sneller_spark.operators.sketch import cm_sketch
+    from sneller_spark.pipeline.runner import read_merged_sketch, unit_id_for
 
     inp, out = tmp_path / "in", str(tmp_path / "out")
     inp.mkdir()
     generate_chunk(0, 300).to_parquet(inp / "part-0.parquet", index=False)
     pq.write_table(pa.Table.from_pandas(generate_chunk(0, 10), preserve_index=False)
                    .slice(0, 0), inp / "part-1.parquet")
-    stats = run_pipeline(spark, str(inp), out, sketch_col="source")
+    stats = run_pipeline(spark, str(inp), out)
     assert stats["units"] == 2 and stats["rows_routed"] == 300
+    assert LineageLog(out).read_manifest(unit_id_for(str(inp / "part-1.parquet"))).partials == []
     _assert_partials_equal_rescan(spark, out)
-    assert read_merged_sketch(spark, out).df.count() > 0
+    merged = read_merged_sketch(spark, out)
+    assert merged.df.count() > 0
+    assert _rows(merged.df) == _rows(cm_sketch(read_routed(spark, out), "source").df)
 
 
 def _routed_tables(unit_root: str) -> dict[str, pa.Table]:
@@ -281,20 +286,20 @@ def test_row_groups_are_tasks_with_one_group_result(spark, tmp_path):
         assert one[sink].sort_by("doc_id").equals(three[sink].sort_by("doc_id")), sink
 
 
-def test_arrow_enrich_equals_enrich_join(spark):
+def test_arrow_enrich_equals_enrich_stage(spark):
     """The Arrow lookup gives the left join's columns, types and
     defaults: unknown and null sources, and a matched source whose
     looked-up value is null, all take the default."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     from sneller_spark.lookups import lookup_source_df
-    from sneller_spark.pipeline.enrich import collect_lookup, enrich_columns, enrich_join
+    from sneller_spark.pipeline.enrich import collect_lookup, enrich_columns, enrich_stage
 
     lookup = lookup_source_df(spark).union(spark.createDataFrame(
         [("odd-source", None, "web")], "source string, tenant string, category string"))
     keys = ["syslog-a", "nginx", "nope", None, "odd-source", "telemetry-x"]
     df = spark.createDataFrame([(i, k) for i, k in enumerate(keys)], "i long, source string")
-    want = enrich_join(df, lookup)
+    want = enrich_stage(df, lookup)
     table = collect_lookup(lookup)
     got = enrich_columns(table, pa.array(keys))
     assert [f.name for f in table.fields] == ["tenant", "category"]
